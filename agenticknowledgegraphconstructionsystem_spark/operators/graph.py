@@ -155,7 +155,6 @@ def triangle_counts(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    degree_orient: bool = True,
 ) -> DataFrame:
     """Per-node triangle participation counts over an undirected graph
     given as canonical edges (one row per edge, distinct) — the
@@ -164,29 +163,21 @@ def triangle_counts(
     The ordered-edge join: with every edge stored once as (lo, hi) under
     a strict total order ≺, a triangle a≺b≺c is found exactly once as
     (a,b)⋈(b,c) wedge closed by (a,c) — no double counting, no
-    post-dedup.  By default the order is (degree, id)
+    post-dedup.  The order is (degree, id)
     (:func:`degree_oriented_edges`), which bounds the wedge fan-out by
     arboricity instead of O(d²) on hub vertices; the DuckDB gate twin
-    applies the identical re-orientation CTE.  ``degree_orient=False``
-    keeps the caller's id ordering (the counts are identical — order
-    choice only changes the candidate-wedge count, pinned by pytest).
+    applies the identical re-orientation CTE.
 
     → (node, n_triangles), one row per node appearing in ≥ 1 triangle.
     """
-    oriented = (
-        degree_oriented_edges(edges, src, dst)
-        if degree_orient
-        else edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    )
-    if degree_orient:
-        # the oriented edge list feeds all THREE branches of the triangle
-        # self-join; Spark performs no cross-branch common-subexpression
-        # elimination, so without materialization the degree aggregation +
-        # two orientation joins would run three times (same-session
-        # interleaved min-of-3 at sf0.1: 13.7 s lazy vs 9.0 s
-        # checkpointed).  At cluster scale the equivalent move is
-        # committing the oriented edge table to storage first.
-        oriented = oriented.transform(cut_lineage)
+    # the oriented edge list feeds all THREE branches of the triangle
+    # self-join; Spark performs no cross-branch common-subexpression
+    # elimination, so without materialization the degree aggregation +
+    # two orientation joins would run three times (same-session
+    # interleaved min-of-3 at sf0.1: 13.7 s lazy vs 9.0 s
+    # checkpointed).  At cluster scale the equivalent move is
+    # committing the oriented edge table to storage first.
+    oriented = degree_oriented_edges(edges, src, dst).transform(cut_lineage)
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     # Closing join as SHUFFLED HASH, not sort-merge: the wedge side is
     # ~|wedges| rows (353M at sf1 — two orders of magnitude above the
@@ -226,7 +217,6 @@ def pagerank_fixed_point(
     dst: str = "dst",
     iters: int = 8,
     tol: int | None = None,
-    co_partition: bool = False,
 ) -> DataFrame:
     """(src, dst) directed edge list (pre-deduplicated) → (node, pr)
     after ``iters`` power iterations, pr an int64 fixed-point score.
@@ -257,42 +247,14 @@ def pagerank_fixed_point(
     engines, partitionings, and runs.  Floors leak a little mass per
     round (scores sum to slightly under S), identically in both engines.
     """
-    # ``co_partition=True`` — exchange fusion for LARGE node sets: every
-    # per-iteration operator keys on a node id, so the loop's static
-    # inputs are pinned ONCE to the same explicit hash partitioning
-    # (HashPartitioning(node-ish key, nparts); an explicit numPartitions
-    # is never AQE-coalesced, and cut_lineage(preserve_partitioning=True)
-    # keeps it across checkpoints), after which the contribs join
-    # (e_src == node) reads BOTH sides exchange-free and only the dst-sum
-    # aggregation moves data: ONE exchange per iteration instead of three.
-    # Results are partitioning-independent (integer arithmetic) —
-    # pytest-pinned bit-identical either way.
-    #
-    # Default FALSE, and this is a measured negative at gate scale, not a
-    # guess (round-6 interleaved A/B, sf0.1, min-of-3: co-partitioned
-    # 45.0 s vs AQE-adaptive 30.0 s, ratio 1.50 attributable; control
-    # queries at parity): the co-mention graphs behind the gates have
-    # ~10²-10³ nodes, where AQE turns all three per-iteration shuffles
-    # into broadcasts of tiny tables — strictly better than SMJ sorts
-    # over 32 pinned partitions.  The fusion pays off only when the score
-    # vector itself is too big to broadcast (10⁸+ nodes on a cluster),
-    # which no local bench can exhibit honestly; see PLANS.md round 6 for
-    # the large-graph probe.
-    _pp = bool(co_partition)
-
-    def _cut(d: DataFrame) -> DataFrame:
-        return cut_lineage(d, preserve_partitioning=_pp)
-
-    def _pin(d: DataFrame, col: str) -> DataFrame:
-        return d.repartition(nparts, col) if _pp else d
-
-    nparts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # Partitioning is left to AQE, which broadcasts the small per-round
+    # tables at gate scale; pinning every input to one hash partitioning
+    # measured 1.5x slower at sf0.1 (PLANS.md, round 6).
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .transform(lambda d: _pin(d, "node"))
-        .transform(_cut)
+        .transform(cut_lineage)
     )
     n = nodes.count()
     if n == 0:
@@ -301,19 +263,18 @@ def pagerank_fixed_point(
     e = (
         edges.join(out_deg, src)
         .select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"), "out_deg")
-        .transform(lambda d: _pin(d, "e_src"))
-        .transform(_cut)
+        .transform(cut_lineage)
     )
     base = ((DAMP_DEN - DAMP_NUM) * PAGERANK_SCALE) // (DAMP_DEN * n)
     scores = nodes.withColumn(
         "pr", F.lit(PAGERANK_SCALE // n).cast("long")
-    ).transform(_cut)
+    ).transform(cut_lineage)
     has_out = out_deg.select(F.col(src).alias("node"))
     # the dangling SET is static even though its mass changes: when it is
     # empty (always true for symmetrized graphs) the per-iteration scalar
     # aggregate is pure overhead — one membership check up front replaces
     # `iters` driver round-trips (measured 16.7 s → ~8 s at sf0.1)
-    dangling_nodes = nodes.join(has_out, "node", "left_anti").transform(_cut)
+    dangling_nodes = nodes.join(has_out, "node", "left_anti").transform(cut_lineage)
     any_dangling = bool(dangling_nodes.head(1))
     global LAST_PAGERANK_ITERS
     LAST_PAGERANK_ITERS = 0
@@ -357,7 +318,7 @@ def pagerank_fixed_point(
         # (contribs join + delta join), so an uncut even-round layer would
         # be evaluated twice.
         if any_dangling or tol is not None or it % 2 == 1 or it == iters - 1:
-            new_scores = new_scores.transform(_cut)
+            new_scores = new_scores.transform(cut_lineage)
         if tol is not None and (it % 2 == 1 or it == iters - 1):
             delta = (
                 new_scores.alias("n")

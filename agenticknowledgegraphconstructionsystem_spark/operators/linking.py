@@ -335,6 +335,12 @@ def connected_components(
     cut_lineage every round cuts the lineage chain (reliable checkpoint
     under a configured checkpoint dir, localCheckpoint otherwise) (SURVEY §4:
     driver-side loop over DataFrame ops, checkpointed).
+
+    Not lazy: calling this runs Spark jobs before any action on the
+    result — an eager ``cut_lineage`` of ``edges`` at entry, then the
+    label/edge cuts and the per-round cuts and convergence checks.  Under
+    localCheckpoint the cut blocks stay cached for the session's lifetime;
+    nothing here releases them.
     """
     max_iter = max(int(max_iter), 1)  # the for/else warning needs >= 1 round
     changed = -1  # unknown until the first convergence check
@@ -456,7 +462,12 @@ def canonicalize(
     'representative' (linear-cost dense-family escape hatch — see
     :func:`representative_band_pairs`), or 'auto' (exact below
     DEFAULT_REP_BUCKET members per LSH bucket, star above — see
-    :func:`auto_band_pairs`)."""
+    :func:`auto_band_pairs`).  A NULL mention_count counts as 0 in the
+    election.
+
+    Building the plan is not lazy: it runs :func:`connected_components`,
+    whose eager ``cut_lineage`` calls execute Spark jobs before the
+    returned frame is ever acted on."""
     if scorer == "tfidf_cosine":
         edges = tfidf_cosine_edges(entities, threshold).withColumnRenamed(
             "cosine", "jaccard"
@@ -476,7 +487,9 @@ def canonicalize(
     canon = members.groupBy("component").agg(
         F.min(
             F.struct(
-                (-F.col("mention_count")).alias("negmc"),
+                # a NULL count must never win the election: coalesced to
+                # 0, not left to sort first under min()
+                (-F.coalesce(F.col("mention_count"), F.lit(0))).alias("negmc"),
                 F.col("name").alias("nm"),
             )
         ).alias("b")

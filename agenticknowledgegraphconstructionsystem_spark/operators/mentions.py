@@ -1,17 +1,13 @@
 """Stage 2 — batched mention detection (D1), the deterministic twin of the
 reference's per-document LLM Agent #1 (entity-extraction-agent.ts:30-79).
 
-Two interchangeable implementations with identical output:
-
-* :func:`detect_mentions_native` — **default**: pure Column expressions.
-  The gazetteer is exploded as a literal array per document (a broadcast
-  nested-loop in spirit, but with zero shuffle and zero Python: the whole
-  stage stays inside whole-stage codegen).  At 10^12 docs this is a single
-  narrow map stage — each task reads its parquet split and emits mentions;
-  no data movement at all.
-* :func:`detect_mentions_arrow` — Arrow-batched pandas UDF calling the same
-  shared pure function (:func:`semantics.detect_mentions`); kept as the
-  reference path for parity testing and for gazetteers too large to inline.
+:func:`detect_mentions_native` is pure Column expressions.  The gazetteer
+is exploded as a literal array per document (a broadcast nested-loop in
+spirit, but with zero shuffle and zero Python: the whole stage stays inside
+whole-stage codegen).  At 10^12 docs this is a single narrow map stage —
+each task reads its parquet split and emits mentions; no data movement at
+all.  The shared pure function :func:`semantics.detect_mentions` is the
+specification it is tested against.
 
 Cleaning mirrors P7/P8 (entity-extraction-agent.ts:193-240): names trimmed
 and capped, relevance clamped to [0,1], types normalized to the closed enum
@@ -20,25 +16,10 @@ with fallback 'concept'.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql import types as T
 
 from .. import semantics as S
-
-_MENTION_ARR = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("name", T.StringType()),
-            T.StructField("concept_type", T.StringType()),
-            T.StructField("relevance_pct", T.IntegerType()),
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("context", T.StringType()),
-        ]
-    )
-)
 
 MENTION_COLS = ("url", "name", "concept_type", "relevance_pct", "pos", "context")
 
@@ -59,10 +40,9 @@ def detect_mentions_native(
     Scale crossover: the gazetteer is exploded as a literal array per doc —
     O(docs × |gazetteer|) intermediate rows, zero shuffle, stays in
     whole-stage codegen.  That is the right plan while the gazetteer fits a
-    task's literal budget (up to ~10^3-10^4 terms); past that, switch to
-    :func:`detect_mentions_arrow` — same output, parity-tested, no exploded
-    intermediate rows, and its Python scan can be swapped for an
-    Aho-Corasick pass without touching the plan shape.
+    task's literal budget (up to ~10^3-10^4 terms); past that, a batched
+    scan (an Arrow UDF over :func:`semantics.detect_mentions`, or an
+    Aho-Corasick pass) avoids the exploded intermediate rows.
     """
     t = F.substring(F.col(text_col), 1, S.EXTRACT_TRUNCATE_CHARS)
     gaz = F.array(
@@ -100,33 +80,6 @@ def detect_mentions_native(
             pos.cast("int").alias("pos"),
             F.substring(F.col("t"), pos, S.CONTEXT_MAX).alias("context"),
         )
-    )
-
-
-def _make_arrow_detector(gazetteer):
-    @pandas_udf(_MENTION_ARR)
-    def detect(texts: pd.Series) -> pd.Series:
-        return texts.map(
-            lambda t: [
-                (m.name, m.concept_type, m.relevance_pct, m.pos, m.context)
-                for m in S.detect_mentions(t, gazetteer)
-            ]
-        )
-
-    return detect
-
-
-def detect_mentions_arrow(
-    docs: DataFrame,
-    gazetteer: tuple[tuple[str, str], ...] = S.GAZETTEER,
-    text_col: str = "extracted_text",
-) -> DataFrame:
-    """Arrow-batched variant — same output as :func:`detect_mentions_native`."""
-    det = _make_arrow_detector(gazetteer)
-    return (
-        docs.where(F.col(text_col).isNotNull())
-        .select("url", F.explode(det(F.col(text_col))).alias("m"))
-        .select("url", "m.*")
     )
 
 

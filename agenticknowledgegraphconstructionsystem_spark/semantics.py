@@ -816,6 +816,16 @@ def poly_hash(s: str) -> int:
     return acc
 
 
+def winnow(text: str, k: int, w: int) -> set[int]:
+    """Winnowing fingerprints of a non-empty, already case-folded text:
+    poly_hash of every k-codepoint gram (the whole text when shorter than
+    k), then the min of every w-window of grams (the overall min when
+    there are fewer than w grams).  Specification of
+    operators.textstats.winnow_fingerprints."""
+    grams = [poly_hash(text[i : i + k]) for i in range(max(len(text) - k + 1, 1))]
+    return {min(grams[j : j + w]) for j in range(max(len(grams) - w + 1, 1))}
+
+
 def affine_hash(h: int, a: int, b: int) -> int:
     return (a * h + b) % POLY_P
 
@@ -851,12 +861,6 @@ def threshold_fraction(threshold: float) -> tuple[int, int]:
             "multiplication test cannot overflow int64"
         )
     return fr.numerator, fr.denominator
-
-
-def simhash_bit_vote(h: int, k: int) -> int:
-    """+1 / -1 vote of token-hash ``h`` for simhash bit ``k`` (threshold at
-    P/2, expressed as 2·x >= P so no division enters any engine)."""
-    return 1 if 2 * affine_hash(h, SIMHASH_A[k], SIMHASH_B[k]) >= POLY_P else -1
 
 
 def rhp_planes(dim: int, num_planes: int, seed: int = 7) -> list[list[float]]:

@@ -76,6 +76,16 @@ def test_canonicalize_picks_highest_mention_count(spark):
     assert mapping["lonely"] == "lonely"  # singleton maps to itself
 
 
+def test_canonicalize_null_mention_count_never_wins(spark):
+    """A NULL mention_count counts as 0: min(struct(-count, name)) would
+    otherwise sort the NULL first and elect it."""
+    ents = spark.createDataFrame(
+        [("transformer", 10), ("transformers", None)], "name string, mention_count long"
+    )
+    mapping = {r["name"]: r["canonical_name"] for r in canonicalize(ents).collect()}
+    assert mapping == {"transformer": "transformer", "transformers": "transformer"}
+
+
 def _partition(mapping_rows):
     """component → frozenset(names) from canonicalize() output rows."""
     by_comp: dict = {}

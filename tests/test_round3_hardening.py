@@ -52,10 +52,11 @@ def test_threshold_fraction_rejects_non_terminating():
 # -- winnowing non-ASCII parity ----------------------------------------------
 
 
-def test_winnow_arrow_column_parity_non_ascii(spark):
-    """The arrow kernel must match the Column spec byte-for-byte AFTER the
-    shared F.lower in the plan — including dotted-I (U+0130, whose Python
-    str.lower mapping differs from the JVM's) and astral codepoints."""
+def test_winnow_non_ascii_matches_python_spec(spark):
+    """The kernel must match the Python specification (semantics.winnow)
+    byte-for-byte over text lowered by the plan's own F.lower — including
+    dotted-I (U+0130, two codepoints once lowercased under full case
+    mapping) and astral codepoints (one codepoint, two UTF-16 units)."""
     texts = [
         "İstanbul DENEME İİİ mixed ASCII tail for windows",
         "ΣΊΣΥΦΟΣ greek final sigma Σ at end Σ",
@@ -65,15 +66,9 @@ def test_winnow_arrow_column_parity_non_ascii(spark):
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=t) for i, t in enumerate(texts)]
     )
-    arrow = {
-        (r["doc_id"], r["fp"])
-        for r in winnow_fingerprints(docs, engine="arrow").collect()
-    }
-    column = {
-        (r["doc_id"], r["fp"])
-        for r in winnow_fingerprints(docs, engine="column").collect()
-    }
-    assert arrow == column
+    got = {(r["doc_id"], r["fp"]) for r in winnow_fingerprints(docs).collect()}
+    lowered = docs.select("doc_id", F.lower("text").alias("t")).collect()
+    assert got == {(r["doc_id"], fp) for r in lowered for fp in S.winnow(r["t"], 8, 4)}
 
 
 # -- connected components: pointer jumping + warning --------------------------
