@@ -14,13 +14,31 @@ committed_at) — the set-at-a-time lift of the reference's per-paper
 ``extraction_logs`` (db_init.py:150-159).  A killed run re-enters at the
 first uncommitted stage; committed stages are read back, not recomputed
 (D8 resume, database.ts:66-81).
+
+Where the lineage numbers come from, with no Spark job of their own:
+
+* ``partition_id`` is the id of the Spark write task that landed the
+  output files (the ``part-<id>-…`` number in their names), and
+  ``output_rows`` that task's row count, both taken from the manifest's
+  ``parts`` (``StageStore`` reads them from the parquet footers).  A task
+  that wrote no rows gets no lineage row.
+* ``input_rows`` is the sum of the manifest ``rows`` of the committed
+  stages the stage's build reads.  ``extract`` is a filter-free projection
+  of the pages (one row per page), so it and every stage that reads the
+  raw pages count the pages as extract's own committed rows.
+* the rows are written on the driver as one small parquet file per stage,
+  strictly after the stage's manifest (data, then manifest, then lineage).
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,6 +88,22 @@ STAGES = (
     "assembly",
 )
 
+#: the ``_lineage`` table (Spark reads it as run_id string, stage string,
+#: partition_id int, input_rows/output_rows/wall_ms bigint, status string,
+#: committed_at timestamp)
+LINEAGE_SCHEMA = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("stage", pa.string()),
+        ("partition_id", pa.int32()),
+        ("input_rows", pa.int64()),
+        ("output_rows", pa.int64()),
+        ("wall_ms", pa.int64()),
+        ("status", pa.string()),
+        ("committed_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
+
 
 class Pipeline:
     def __init__(
@@ -80,7 +114,6 @@ class Pipeline:
         link: bool = True,
         link_threshold: float = 0.5,
         link_mode: str = "all_pairs",
-        dedup_docs: bool = False,
         dedup_mode: str | None = None,
         dedup_threshold: float = 0.5,
         graph_metrics: bool = False,
@@ -114,8 +147,7 @@ class Pipeline:
           a crawl copy with an added banner/prefix still collapses.
 
         ``None`` (default) skips the stage for exact reference parity (the
-        reference ingests whatever arrives).  ``dedup_docs=True`` is the
-        older spelling of ``dedup_mode="exact"``.  Like every stage it
+        reference ingests whatever arrives).  Like every stage it
         commits through StageStore with per-partition lineage and resume.
 
         ``curate=True`` adds the training-data curation stage after dedup:
@@ -184,7 +216,7 @@ class Pipeline:
         # — the web-scale default shape; 'all_pairs' keeps the exact gate
         # semantics and stays the constructor default
         self.link_mode = link_mode
-        self.dedup_mode = dedup_mode or ("exact" if dedup_docs else None)
+        self.dedup_mode = dedup_mode
         self.dedup_threshold = dedup_threshold
         self.graph_metrics = graph_metrics
         self.link_graph = link_graph
@@ -199,23 +231,36 @@ class Pipeline:
         self._recomputed: list[str] = []
 
     # -- lineage ---------------------------------------------------------
-    def _lineage_rows(self, stage: str, out: DataFrame, input_rows: int, wall_ms: int):
-        per_part = (
-            out.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id")
-            .agg(F.count("*").alias("output_rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                "partition_id",
-                F.lit(input_rows).cast("long").alias("input_rows"),
-                F.col("output_rows").cast("long"),
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.lit("success").alias("status"),
-                F.current_timestamp().alias("committed_at"),
-            )
-        )
-        per_part.write.mode("append").parquet(f"{self.store.base_dir}/_lineage")
+    def _lineage_rows(
+        self, stage: str, parts: list[list[int]], input_rows: int, wall_ms: int
+    ) -> None:
+        """Append one lineage row per ``[write_task_id, rows]`` entry of a
+        manifest's ``parts`` that has rows, as one parquet file written on
+        the driver (no Spark job).  The file lands under a hidden name and
+        is renamed into place, so a crash never leaves a partial one."""
+        now = datetime.now(timezone.utc)
+        rows = [
+            {
+                "run_id": self.run_id,
+                "stage": stage,
+                "partition_id": task,
+                "input_rows": input_rows,
+                "output_rows": n,
+                "wall_ms": wall_ms,
+                "status": "success",
+                "committed_at": now,
+            }
+            for task, n in parts
+            if n > 0
+        ]
+        if not rows:
+            return
+        lineage_dir = os.path.join(self.store.base_dir, "_lineage")
+        os.makedirs(lineage_dir, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(lineage_dir, "." + name)
+        pq.write_table(pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA), tmp)
+        os.replace(tmp, os.path.join(lineage_dir, name))
 
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.store.base_dir}/_lineage")
@@ -291,19 +336,24 @@ class Pipeline:
         self,
         name: str,
         build,
-        input_rows: int = -1,
+        inputs: tuple[str, ...],
         partition_by: list[str] | None = None,
     ) -> DataFrame:
+        """Commit ``build()`` as stage ``name`` unless it is already
+        committed.  ``inputs`` names the committed stages the build reads;
+        the lineage's ``input_rows`` is the sum of their manifest rows."""
         if self.store.is_committed(name):
             return self.store.read(name)
         t0 = time.time()
-        df = build()
-        out = self.store.commit(name, df, self.run_id, partition_by=partition_by)
+        out = self.store.commit(name, build(), self.run_id, partition_by=partition_by)
         self._recomputed.append(name)
-        self._lineage_rows(name, out, input_rows, int((time.time() - t0) * 1000))
+        wall_ms = int((time.time() - t0) * 1000)
+        input_rows = sum(self.store.manifest(s)["rows"] for s in inputs)
+        parts = self.store.manifest(name)["parts"]
+        self._lineage_rows(name, parts, input_rows, wall_ms)
         return out
 
-    def _dedup_docs(self, docs: DataFrame) -> DataFrame:
+    def _exact_dedup(self, docs: DataFrame) -> DataFrame:
         """Exact content dedup: keep the min-url row per extracted_text
         hash (semi join against the keeper set — one shuffle on the
         128-bit hash, perfectly balanced keys).  Rows with NULL text all
@@ -319,7 +369,7 @@ class Pipeline:
             docs.where(F.col("extracted_text").isNull())
         )
 
-    def _near_dedup_docs(self, docs: DataFrame) -> DataFrame:
+    def _near_dedup(self, docs: DataFrame) -> DataFrame:
         """Near-duplicate corpus dedup: exact pass first (catches identical
         short docs the shingle/fingerprint blockers can't see), then
         near-dup pairs at >= dedup_threshold Jaccard, connected components
@@ -337,7 +387,7 @@ class Pipeline:
             winnow_near_duplicates,
         )
 
-        base = self._dedup_docs(docs)
+        base = self._exact_dedup(docs)
         with_text = base.where(F.col("extracted_text").isNotNull())
         if self.dedup_mode == "minhash":
             pairs = minhash_near_duplicates(
@@ -438,12 +488,11 @@ class Pipeline:
         from ..sources.io import resume_inputs
 
         if not self.store.is_committed("extract"):
-            new_docs = extract_docs(pages)
-            self.store.commit("extract", new_docs, self.run_id)
-            return self.store.read("extract")
+            return self.store.commit("extract", extract_docs(pages), self.run_id)
         committed = self.store.read("extract")
         todo = resume_inputs(pages, committed, "url")
-        # one materialization serves the append AND the delta detection
+        # one materialization serves the no-op check, the append AND the
+        # delta detection
         new_docs = extract_docs(todo).transform(cut_lineage)
         n_new = new_docs.count()
         if n_new == 0:
@@ -471,32 +520,43 @@ class Pipeline:
         for stage in STAGES:
             if stage not in keep:
                 self.store.uncommit(stage)
-        self.store.append("extract", new_docs, n_new)
+        self.store.append("extract", new_docs)
         if incremental_mentions:
             t0 = time.time()
-            delta_m = clean_mentions(detect_mentions_native(new_docs)).transform(cut_lineage)
-            n_delta = delta_m.count()
-            self.store.append("mentions", delta_m, n_delta)
+            n_base_parts = len(self.store.manifest("mentions")["parts"])
+            self.store.append(
+                "mentions", clean_mentions(detect_mentions_native(new_docs))
+            )
+            # the delta's parts follow the base's (StageStore.append)
+            delta_parts = self.store.manifest("mentions")["parts"][n_base_parts:]
             self._lineage_rows(
-                "mentions", delta_m, n_new, int((time.time() - t0) * 1000)
+                "mentions", delta_parts, n_new, int((time.time() - t0) * 1000)
             )
         return new_docs
 
     # -- the pipeline ----------------------------------------------------
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
-        docs = self._stage("extract", lambda: extract_docs(pages))
+        # inputs of each stage, as committed stage names (_stage docstring);
+        # the raw pages are counted as extract's rows (module docstring)
+        pages_in = ("extract",)
+        docs = self._stage("extract", lambda: extract_docs(pages), pages_in)
+        docs_in = ("extract",)
         if self.dedup_mode in ("minhash", "winnow"):
-            docs = self._stage("dedup", lambda: self._near_dedup_docs(docs))
+            docs = self._stage("dedup", lambda: self._near_dedup(docs), docs_in)
             from ..operators.dedup import unpersist_tracked
 
             unpersist_tracked()  # stage is committed; free cached fp/sig blocks
+            docs_in = ("dedup",)
         elif self.dedup_mode == "exact":
-            docs = self._stage("dedup", lambda: self._dedup_docs(docs))
+            docs = self._stage("dedup", lambda: self._exact_dedup(docs), docs_in)
+            docs_in = ("dedup",)
         if self.curate:
-            docs = self._stage("curate", lambda: self._curate_docs(docs))
+            docs = self._stage("curate", lambda: self._curate_docs(docs), docs_in)
+            docs_in = ("curate",)
         raw_mentions = self._stage(
-            "mentions", lambda: clean_mentions(detect_mentions_native(docs))
+            "mentions", lambda: clean_mentions(detect_mentions_native(docs)), docs_in
         )
+        mentions_in = ("mentions",)
         if self.link:
             raw_entities = build_entities(raw_mentions)
             mapping = self._stage(
@@ -506,7 +566,9 @@ class Pipeline:
                     threshold=self.link_threshold,
                     mode=self.link_mode,
                 ),
+                mentions_in,
             )
+            mentions_in = ("mentions", "canonical_map")
             # merged surface forms leave duplicate (url, name) rows —
             # collapse to the best row per key before entities/relationships
             # (else sum_relevance double-counts and the shared-concept join
@@ -519,42 +581,54 @@ class Pipeline:
         # entities carry the keep-first description payload
         # (concepts.description, database.ts:109) via the deduped edge table
         entities = self._stage(
-            "entities", lambda: build_entities_with_context(mentions)
+            "entities", lambda: build_entities_with_context(mentions), mentions_in
         )
-        edges = self._stage("edges", lambda: build_doc_concept_edges(mentions))
+        edges = self._stage(
+            "edges", lambda: build_doc_concept_edges(mentions), mentions_in
+        )
         rels = self._stage(
-            "relationships", lambda: discover_relationships(docs, mentions)
+            "relationships",
+            lambda: discover_relationships(docs, mentions),
+            docs_in + mentions_in,
         )
         rel_edges, _null_rels = upsert_relationship_edges(rels)
-        triples = self._stage("triples", lambda: build_triples(edges, rel_edges))
+        triples = self._stage(
+            "triples",
+            lambda: build_triples(edges, rel_edges),
+            ("edges", "relationships"),
+        )
         findings = self._stage(
             "findings",
             lambda: entity_findings(entities, edges).unionByName(
                 relationship_findings(rels)
             ),
+            ("entities", "edges", "relationships"),
         )
         validated = self._stage(
             "validated_edges",
             lambda: apply_validated_flags(
                 rel_edges, findings.where(F.col("item_kind") == "relationship")
             ),
+            ("relationships", "findings"),
         )
         gm = None
         if self.graph_metrics:
-            gm = self._stage("graph_metrics", lambda: self._graph_metrics(mentions))
+            gm = self._stage(
+                "graph_metrics", lambda: self._graph_metrics(mentions), mentions_in
+            )
         lg = hr = None
         if self.link_graph:
             from ..operators.links import link_edges
 
-            lg = self._stage("link_graph", lambda: link_edges(pages))
-            hr = self._stage("host_rank", lambda: self._host_rank(lg))
-            hh = self._stage("host_hits", lambda: self._host_hits(lg))
+            lg = self._stage("link_graph", lambda: link_edges(pages), pages_in)
+            hr = self._stage("host_rank", lambda: self._host_rank(lg), ("link_graph",))
+            hh = self._stage("host_hits", lambda: self._host_hits(lg), ("link_graph",))
         fr = cx = None
         if self.crawl_index:
             from ..operators.sitemaps import discovered_urls
 
-            fr = self._stage("frontier", lambda: discovered_urls(pages))
-            cx = self._stage("cdx", lambda: self._cdx_records(pages))
+            fr = self._stage("frontier", lambda: discovered_urls(pages), pages_in)
+            cx = self._stage("cdx", lambda: self._cdx_records(pages), pages_in)
         ew = et = None
         if self.export_dir is not None:
             from ..sources.warc import write_warc_shards, write_wet_shards
@@ -564,6 +638,7 @@ class Pipeline:
                 lambda: write_warc_shards(
                     pages, os.path.join(self.export_dir, "warc")
                 ),
+                pages_in,
             )
             wet_docs = docs.select("url", "extracted_text").join(
                 pages.select("url", "warc_ts"), "url"
@@ -575,6 +650,7 @@ class Pipeline:
                     os.path.join(self.export_dir, "wet"),
                     text_col="extracted_text",
                 ),
+                docs_in + pages_in,
             )
         asm = None
         if self.assemble_ctx is not None:
@@ -584,6 +660,7 @@ class Pipeline:
             asm = self._stage(
                 "assembly",
                 lambda: self._assemble(docs),
+                docs_in,
                 partition_by=["shard"],
             )
         self._results = {

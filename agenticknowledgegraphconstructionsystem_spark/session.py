@@ -47,6 +47,15 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 SPREAD_ROWS_PER_PART = int(os.environ.get("SPARK_GRAFT_SPREAD_ROWS", "512"))
 
 
+def footer_rows(path: str) -> int:
+    """Row count of one local parquet file, read from its footer on the
+    driver (no Spark job).  The one footer reader: ``spread_scan`` sizes
+    its exchange with it and ``StageStore`` counts committed rows with it."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path).num_rows
+
+
 def _scan_rows(df: DataFrame) -> int | None:
     """Total parquet rows behind ``df``'s scan, from file footers on the
     driver (no Spark job).  None when the inputs are not local parquet
@@ -57,14 +66,12 @@ def _scan_rows(df: DataFrame) -> int | None:
             return None
         from urllib.parse import unquote, urlparse
 
-        import pyarrow.parquet as pq
-
         total = 0
         for f in files:
             u = urlparse(f)
             if u.scheme not in ("file", ""):
                 return None
-            total += pq.ParquetFile(unquote(u.path)).metadata.num_rows
+            total += footer_rows(unquote(u.path))
         return total
     except Exception:
         return None

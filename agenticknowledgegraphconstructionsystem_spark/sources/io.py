@@ -9,7 +9,10 @@ sidecar ``_manifest.json``:
   the parquet data lands → crash between data and manifest = uncommitted,
   the stage reruns — same contract as an Iceberg snapshot),
 * ``merge_by_key`` gives MERGE/upsert semantics (latest-wins by an explicit
-  deterministic ordering column — never arrival order).
+  deterministic ordering column — never arrival order),
+* row counts come from the files a write landed: each part file's parquet
+  footer, read on the driver (the analogue of Iceberg's per-data-file
+  ``record_count``), so a commit runs exactly one Spark job — the write.
 
 Keep this interface thin so the Iceberg path is a drop-in on a real
 cluster.
@@ -21,9 +24,13 @@ import json
 import os
 import shutil
 import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import footer_rows
 
 
 #: real-cluster DDL the shim stands in for (SURVEY §2.1 S13: indexes →
@@ -68,6 +75,16 @@ class StageStore:
     ``RETAIN_SNAPSHOTS`` superseded snapshots are kept; older unreferenced
     data directories are pruned on the next mutation (Iceberg
     ``expire_snapshots``).
+
+    Counts: every snapshot records ``parts = [[write_task_id, rows], …]``,
+    one entry per Spark write task that landed a file, with ``rows`` read
+    from the part files' parquet footers on the driver — no read-back, no
+    ``count()`` job.  The task id is the ``part-<id>-…`` number Spark puts
+    in every file name; a task that wrote several files (one per Hive
+    partition directory) is summed into one entry.  An append adds its
+    delta's entries after the base's, so ``rows == sum of parts`` holds
+    for every snapshot.  The snapshot also records the DataFrame schema,
+    and ``read`` scans with it, so no schema-inference job runs either.
     """
 
     #: superseded snapshots retained for time travel / rollback
@@ -122,6 +139,7 @@ class StageStore:
                 "run_id",
                 "partition_by",
                 "schema",
+                "parts",
             )
             if k in m
         }
@@ -161,24 +179,32 @@ class StageStore:
         return [self._summary(m)] + list(m.get("history", []))
 
     # -- mutations ---------------------------------------------------------
+    def _parts(self, stage: str, rel: str) -> list[list[int]]:
+        """``[[write_task_id, rows], …]`` of one data dir, from the part
+        files' footers (see the class docstring)."""
+        rows: Counter[int] = Counter()
+        for root, _dirs, files in os.walk(os.path.join(self._path(stage), rel)):
+            for name in files:
+                if name.startswith("part-") and name.endswith(".parquet"):
+                    task = int(name.split("-", 2)[1])
+                    rows[task] += footer_rows(os.path.join(root, name))
+        return [[task, n] for task, n in sorted(rows.items())]
+
     def commit(
         self,
         stage: str,
         df: DataFrame,
         run_id: str,
-        meta: dict | None = None,
         partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Write stage output as a fresh full snapshot, then atomically mark
-        committed via the manifest.
+        committed via the manifest; returns ``read(stage)``.  One Spark job:
+        the write (counts come from the footers, see the class docstring).
 
         ``partition_by`` writes a Hive-partitioned layout (the parquet
         analog of an Iceberg partition spec): consumers filtering on a
         partition column read only its directories — Catalyst shows the
-        pruning as ``PartitionFilters`` on the scan.  The declared column
-        order and types survive the round-trip (partition-directory
-        values are string-encoded on disk and would otherwise re-infer
-        as int and migrate to the end of the schema)."""
+        pruning as ``PartitionFilters`` on the scan."""
         t0 = time.time()
         snap_id = self._next_id(stage)
         rel = f"snap-{snap_id}"
@@ -186,37 +212,30 @@ class StageStore:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(os.path.join(self._path(stage), rel))
-        out = self.spark.read.parquet(os.path.join(self._path(stage), rel))
-        if partition_by:
-            out = out.select(
-                *[F.col(f.name).cast(f.dataType) for f in df.schema.fields]
-            )
-        n = out.count()
+        parts = self._parts(stage, rel)
         prev = self.manifest(stage) if self.is_committed(stage) else None
         manifest = {
             "stage": stage,
             "run_id": run_id,
-            "rows": n,
+            "rows": sum(n for _task, n in parts),
+            "parts": parts,
+            "schema": df.schema.jsonValue(),
             "wall_ms": int((time.time() - t0) * 1000),
             "committed_at": time.time(),
             "snapshot_id": snap_id,
             "kind": "overwrite",
             "paths": [rel],
-            **(
-                {"partition_by": partition_by, "schema": df.schema.jsonValue()}
-                if partition_by
-                else {}
-            ),
-            **(meta or {}),
+            **({"partition_by": partition_by} if partition_by else {}),
         }
         self._write_manifest(stage, manifest, prev)
-        return out
+        return self.read(stage)
 
-    def append(self, stage: str, df: DataFrame, added_rows: int | None = None) -> int:
+    def append(self, stage: str, df: DataFrame) -> int:
         """Iceberg-style append: land a delta data dir, then publish a new
         snapshot referencing previous dirs + the delta.  Existing files are
-        never rewritten, so every retained snapshot stays readable.
-        Returns the number of appended rows."""
+        never rewritten, so every retained snapshot stays readable.  The
+        delta's ``parts`` follow the base's in the manifest.  Returns the
+        number of appended rows."""
         prev = self.manifest(stage)  # raises if not committed — appends need a base
         if prev.get("partition_by"):
             # delta dirs are written unpartitioned; mixing them under a
@@ -230,13 +249,12 @@ class StageStore:
         snap_id = self._next_id(stage)
         rel = f"delta-{snap_id}"
         df.write.mode("overwrite").parquet(os.path.join(self._path(stage), rel))
-        if added_rows is None:
-            added_rows = self.spark.read.parquet(
-                os.path.join(self._path(stage), rel)
-            ).count()
+        added = self._parts(stage, rel)
+        n = sum(rows for _task, rows in added)
         manifest = {
             **{k: v for k, v in prev.items() if k != "history"},
-            "rows": int(prev.get("rows", 0)) + int(added_rows),
+            "rows": prev["rows"] + n,
+            "parts": prev["parts"] + added,
             "committed_at": time.time(),
             "appended_at": time.time(),
             "snapshot_id": snap_id,
@@ -244,7 +262,7 @@ class StageStore:
             "paths": list(prev.get("paths", [])) + [rel],
         }
         self._write_manifest(stage, manifest, prev)
-        return int(added_rows)
+        return n
 
     def rollback(self, stage: str, snapshot_id: int) -> None:
         """Make a retained snapshot current again (Iceberg
@@ -256,31 +274,31 @@ class StageStore:
             return
         target = self._resolve(stage, snapshot_id)
         manifest = {
-            **{k: v for k, v in prev.items() if k != "history"},
-            "rows": target.get("rows"),
+            **{k: v for k, v in prev.items() if k not in ("history", "partition_by")},
+            **{
+                k: target[k]
+                for k in ("rows", "parts", "schema", "paths", "partition_by")
+                if k in target
+            },
             "committed_at": time.time(),
             "snapshot_id": self._next_id(stage),
             "kind": "rollback",
             "rolled_back_to": snapshot_id,
-            "paths": list(target.get("paths", [])),
         }
         self._write_manifest(stage, manifest, prev)
 
     # -- reads -------------------------------------------------------------
     def read(self, stage: str, as_of: int | None = None) -> DataFrame:
-        """Read the current snapshot, or any retained one via ``as_of``.
-        Partitioned snapshots are restored to their declared column order
-        and types (the manifest carries the schema — see commit)."""
+        """Read the current snapshot, or any retained one via ``as_of``,
+        with the schema recorded at commit, so no inference job runs.
+        Spark puts Hive partition columns last; a partitioned snapshot is
+        put back in its declared column order."""
         snap = self._resolve(stage, as_of)
+        schema = T.StructType.fromJson(snap["schema"])
         paths = [os.path.join(self._path(stage), rel) for rel in snap["paths"]]
-        out = self.spark.read.parquet(*paths)
-        if snap.get("schema"):
-            from pyspark.sql import types as T
-
-            sch = T.StructType.fromJson(snap["schema"])
-            out = out.select(
-                *[F.col(f.name).cast(f.dataType) for f in sch.fields]
-            )
+        out = self.spark.read.schema(schema).parquet(*paths)
+        if snap.get("partition_by"):
+            out = out.select(*[F.col(name) for name in schema.fieldNames()])
         return out
 
     def uncommit(self, stage: str) -> None:

@@ -45,6 +45,10 @@ def test_resume_after_kill(spark, tmp_path):
     assert ("r2", "relationships") in by_run_stage
     # per-partition rows carry counts + status
     assert all(r["status"] == "success" and r["output_rows"] > 0 for r in lin)
+    # input counts are filled from the input stages' manifests; extract
+    # counts its own rows, one per page
+    assert all(r["input_rows"] > 0 for r in lin)
+    assert {r["input_rows"] for r in lin if r["stage"] == "extract"} == {60}
 
 
 @pytest.mark.slow

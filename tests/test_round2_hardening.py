@@ -359,7 +359,7 @@ def test_pipeline_dedup_docs_stage(spark, tmp_path):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    p = Pipeline(spark, str(tmp_path / "kg_dedup"), dedup_docs=True, link=False)
+    p = Pipeline(spark, str(tmp_path / "kg_dedup"), dedup_mode="exact", link=False)
     out = p.run(pages)
     urls = {r["url"] for r in out["docs"].select("url").collect()}
     assert urls == {"u1", "u3", "u4", "u5"}  # u2 deduped, nulls kept

@@ -37,6 +37,7 @@ def test_commit_append_rollback_roundtrip(spark, tmp_path):
     store.rollback("t", snap0)
     m2 = store.manifest("t")
     assert m2["kind"] == "rollback" and m2["rolled_back_to"] == snap0
+    assert sum(n for _task, n in m2["parts"]) == m2["rows"] == 10
     assert _rows(store.read("t")) == good
 
     # the rolled-back-FROM state is itself still in history
@@ -45,7 +46,8 @@ def test_commit_append_rollback_roundtrip(spark, tmp_path):
 
     # re-running the same append lands on the rolled-back base → same state
     store.append("t", spark.range(100, 105).withColumnRenamed("id", "k"))
-    assert store.manifest("t")["rows"] == 15
+    m3 = store.manifest("t")
+    assert sum(n for _task, n in m3["parts"]) == m3["rows"] == 15
 
 
 def test_append_to_partitioned_stage_raises(spark, tmp_path):
@@ -64,6 +66,67 @@ def test_append_to_partitioned_stage_raises(spark, tmp_path):
     # the refused append must not have mutated the snapshot
     assert store.manifest("t")["kind"] == "overwrite"
     assert len(_rows(store.read("t"))) == 10
+
+
+LINEAGE_SCHEMA = (
+    "struct<run_id:string,stage:string,partition_id:int,input_rows:bigint,"
+    "output_rows:bigint,wall_ms:bigint,status:string,committed_at:timestamp>"
+)
+
+
+def _jobs_run_by(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn ran), counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", ["narrow", "empty", "partitioned"])
+def test_stage_commit_is_one_job_counted_from_footers(spark, tmp_path, case):
+    """A stage commit runs one Spark job, the write.  Its row counts come
+    from the part files' footers, and its lineage is written from the
+    manifest's parts on the driver: one row per write task, keyed by the
+    task id, none for a task that wrote no rows."""
+    from pyspark.sql import functions as F
+
+    frame = spark.range(0, 1000, 1, 4)
+    partition_by = None
+    lineage = [(0, 250), (1, 250), (2, 250), (3, 250)]
+    if case == "empty":
+        frame = frame.where(F.col("id") < 0)
+        lineage = []
+    elif case == "partitioned":
+        # every write task lands one file per shard directory; its lineage
+        # row sums them
+        frame = frame.select("id", (F.col("id") % 3).alias("shard"))
+        partition_by = ["shard"]
+
+    p = Pipeline(spark, str(tmp_path / "kg"), run_id="j")
+    out, jobs = _jobs_run_by(
+        spark,
+        f"stage-commit-{case}",
+        lambda: p._stage("t", lambda: frame, ("t",), partition_by=partition_by),
+    )
+    assert jobs == 1
+    m = p.store.manifest("t")
+    assert sum(n for _task, n in m["parts"]) == m["rows"] == out.count()
+    assert m["rows"] == sum(n for _task, n in lineage)
+    assert out.schema == p.store.read("t").schema
+    assert out.columns == frame.columns
+    if not lineage:
+        assert not (tmp_path / "kg" / "_lineage").exists()
+        return
+    lin = p.lineage()
+    assert lin.schema.simpleString() == LINEAGE_SCHEMA
+    rows = lin.collect()
+    assert sorted((r["partition_id"], r["output_rows"]) for r in rows) == lineage
+    # the stage names itself as its input: input_rows is its own count
+    assert {(r["input_rows"], r["status"]) for r in rows} == {(1000, "success")}
 
 
 def test_iceberg_ddl_parses(spark):
