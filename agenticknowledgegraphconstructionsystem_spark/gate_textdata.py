@@ -12,10 +12,12 @@ Exactness techniques:
 
 from __future__ import annotations
 
+from fractions import Fraction
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators.dedup import word_ngram_shingles
+from .operators.dedup import ngram_jaccard_pairs
 from .session import spread_scan
 from .operators.similarity import _dot, _norm
 from .operators.textstats import (
@@ -65,22 +67,8 @@ FROM documents GROUP BY md5(text)"""
 
 def q_ngram_jaccard(spark, sf_dir):
     """Exact 3-gram Jaccard pairs at threshold 1/3, integers only."""
-    sh = word_ngram_shingles(_docs(spark, sf_dir), n=3)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    j = (
-        inter.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return j.where(F.col("inter") * 3 >= union).select(
+    p = ngram_jaccard_pairs(_docs(spark, sf_dir), n=3, threshold=Fraction(1, 3))
+    return p.select(
         F.col("id_a").cast(_BIG).alias("id_a"),
         F.col("id_b").cast(_BIG).alias("id_b"),
         F.col("inter").cast(_BIG).alias("inter"),
@@ -322,8 +310,6 @@ def q_minhash_dups(spark, sf_dir):
 
 
 def _o_minhash_dups() -> str:
-    from fractions import Fraction
-
     g = MINHASH_GATE
     rpb = g["num_hashes"] // g["bands"]
     fr = Fraction(str(g["threshold"]))
@@ -579,8 +565,6 @@ def q_winnow_dups(spark, sf_dir):
 
 
 def _o_winnow_dups() -> str:
-    from fractions import Fraction
-
     fr = Fraction("0.3")
     base = _o_winnow_fp()
     return f"""
@@ -621,8 +605,6 @@ def q_dedup_survivors(spark, sf_dir):
 
 
 def _o_dedup_survivors() -> str:
-    from fractions import Fraction
-
     fr = Fraction("0.3")
     base = _o_winnow_fp()
     return f"""

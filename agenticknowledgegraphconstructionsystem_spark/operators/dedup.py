@@ -15,11 +15,16 @@ Scale notes (10^12 docs):
 * SimHash: one pass building a 64-bit signature (map-side), pairs via
   banded prefix blocking + popcount(XOR) <= k verify.
 
+The set-overlap joins are not written here: exact n-gram Jaccard, winnow
+pairs and the MinHash candidate verify all call :mod:`.overlap`, the one
+shared-element pair join and hot-element cap that entity linking and the
+co-mention graph use too.
+
 Hashing is the portable poly/affine family from :mod:`..semantics`
 (cross-engine exact), so every signature and candidate set here is
 reproducible in DuckDB SQL — the driver's correctness gate hash-compares
 them (gate_textdata.py oracles).  Thresholds are applied as exact integer
-cross-multiplication (semantics.threshold_fraction), never float compares.
+cross-multiplication (overlap.jaccard_tail), never float compares.
 """
 
 from __future__ import annotations
@@ -30,7 +35,7 @@ from pyspark.sql import functions as F
 
 from .. import semantics as S
 from ..functions.hashing import minhash_col, poly_hash_col, simhash_vote_col
-from ..semantics import threshold_fraction as _threshold_fraction
+from . import overlap
 
 #: default LSH band-bucket cap — buckets above this emit no candidate pairs
 #: (they are non-discriminative and quadratic); far above anything the
@@ -194,42 +199,6 @@ def dropped_band_buckets(banded: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def _jaccard_verify(
-    cand: DataFrame, sh: DataFrame, key: str, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard verification on candidate pairs only: shared-shingle
-    count per pair, integer cross-multiplication threshold, plus the float
-    jaccard for consumers (exact IEEE division of two ints — identical in
-    every engine)."""
-    num, den = _threshold_fraction(threshold)
-    sizes = sh.groupBy(key).agg(F.count("*").alias("sz"))
-    sh_a = sh.select(F.col(key).alias("id_a"), "shingle")
-    sh_b = sh.select(F.col(key).alias("idb2"), F.col("shingle").alias("shingle_b"))
-    inter = (
-        cand.join(sh_a, "id_a")
-        .join(
-            sh_b,
-            (F.col("id_b") == F.col("idb2")) & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return (
-        inter.join(sizes.select(F.col(key).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(key).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .where(F.col("inter") * den >= F.lit(num) * union)
-        .select(
-            "id_a",
-            "id_b",
-            "inter",
-            "sz_a",
-            "sz_b",
-            (F.col("inter") / union).alias("jaccard"),
-        )
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     key: str = "doc_id",
@@ -242,29 +211,10 @@ def ngram_jaccard_pairs(
     This is the *oracle-checkable* exact path; at corpus scale prefer
     :func:`minhash_near_duplicates` (LSH prunes the pair space).  Pairs
     sharing no shingle never materialize — the join on shingle is the
-    blocker.
+    blocker (overlap.self_jaccard).
     """
-    num, den = _threshold_fraction(threshold)
-    sh = _maybe_persist(word_ngram_shingles(docs, key, text_col, n), True)
-    sizes = sh.groupBy(key).agg(F.count("*").alias("sz"))
-    a = sh.select(F.col(key).alias("id_a"), "shingle")
-    b = sh.select(F.col(key).alias("id_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return (
-        inter.join(sizes.select(F.col(key).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(key).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .where(F.col("inter") * den >= F.lit(num) * union)
-        .select(
-            "id_a", "id_b", "inter", "sz_a", "sz_b",
-            (F.col("inter") / union).alias("jaccard"),
-        )
-    )
+    sh = word_ngram_shingles(docs, key, text_col, n)
+    return overlap.self_jaccard(sh, key, "shingle", threshold)
 
 
 def minhash_banded_signatures(
@@ -340,7 +290,7 @@ def minhash_near_duplicates(
     # shingle table already persisted above.
     banded = _maybe_persist(banded, True)
     cand = capped_band_pairs(banded, key, max_bucket)
-    return _jaccard_verify(cand, sh, key, threshold)
+    return overlap.verify_jaccard(cand, sh, key, "shingle", threshold)
 
 
 def winnow_near_duplicates(
@@ -374,47 +324,18 @@ def winnow_near_duplicates(
     """
     from .textstats import winnow_fingerprints
 
-    num, den = _threshold_fraction(threshold)
     # persist BEFORE the df branch: the winnowing expression (per-gram char
     # folds) is the expensive subtree and feeds both the df count and the
     # filtered fp table
     fp = _maybe_persist(winnow_fingerprints(docs, key, text_col, k, w), True)
     if max_df is not None:
-        # exclude via the HOT-fp complement (bounded: at most |fp|/max_df
-        # entries) with an anti-join per consuming branch: the filtered
-        # table used to be eagerly persisted so the df-count subplan
-        # would not replay per branch, but persisting the tiny hot list
-        # achieves the same single df evaluation while skipping a full
-        # cache materialization of the corpus-sized filtered table —
-        # each branch then reads the (already cached) raw fp table plus
-        # a small anti join.
-        hot = _maybe_persist(
-            fp.groupBy("fp")
-            .agg(F.count("*").alias("_df"))
-            .where(F.col("_df") > max_df)
-            .select("fp"),
-            True,
-        )
-        fp = fp.join(hot, "fp", "left_anti")
-    sizes = fp.groupBy(key).agg(F.count("*").alias("sz"))
-    a = fp.select(F.col(key).alias("id_a"), "fp")
-    b = fp.select(F.col(key).alias("id_b"), "fp")
-    inter = (
-        a.join(b, "fp")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return (
-        inter.join(sizes.select(F.col(key).alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(key).alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
-        .where(F.col("inter") * den >= F.lit(num) * union)
-        .select(
-            "id_a", "id_b", "inter", "sz_a", "sz_b",
-            (F.col("inter") / union).alias("jaccard"),
-        )
-    )
+        # persisting the tiny hot list (at most |fp|/max_df entries) gives
+        # one df evaluation for every consuming branch without caching a
+        # second, corpus-sized filtered table: each branch reads the
+        # cached fp table plus a small anti-join
+        hot = _maybe_persist(overlap.hot_elements(fp, key, "fp", max_df), True)
+        fp = overlap.drop_elements(fp, "fp", hot)
+    return overlap.self_jaccard(fp, key, "fp", threshold)
 
 
 def near_dup_losers(pairs: DataFrame) -> DataFrame:

@@ -26,17 +26,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import cut_lineage
+from . import overlap
 
 #: fixed-point scale: scores sum to ~SCALE; 10^12 keeps every
 #: intermediate (85 * score sums) far under 2^53, so even the
 #: floor(double-division) form is exact — and under 2^63 for int sums
 PAGERANK_SCALE = 10**12
 DAMP_NUM, DAMP_DEN = 85, 100  # damping 0.85 as an exact rational
-
-#: iterations actually executed by the last pagerank_fixed_point call on
-#: this driver — observability for the tol early-stop path (pytest pins
-#: that a converged graph stops before the iteration cap)
-LAST_PAGERANK_ITERS = 0
 
 
 def comention_edges(
@@ -49,10 +45,13 @@ def comention_edges(
 ) -> DataFrame:
     """Canonical (da < db) co-mention document edges: docs sharing >=
     ``min_shared`` relevant concepts.  The document-frequency cap cuts
-    hot names BEFORE pairing (a name appearing in df docs contributes
-    df² pair rows — the pairwise_shared_concepts skew discipline);
+    names in more than max(floor(N·df_cap_frac), df_cap_min) docs BEFORE
+    pairing (a name appearing in df docs contributes df² pair rows);
     banding redundancy is irrelevant here because the co-mention
     semantics themselves exclude ubiquitous names as non-discriminative.
+    Cap, self-join and probe-side repartition are the set-overlap
+    operator (operators/overlap.py) that pairwise_shared_concepts also
+    uses; building this DataFrame runs no Spark job.
     Shared by the kg_pagerank / kg_triangles gates (DuckDB twin: the
     mf/nd/dfn/keep/mfk/kept CTEs) and the Pipeline's graph_metrics
     stage."""
@@ -60,49 +59,14 @@ def comention_edges(
 
     min_rel = S.MIN_RELEVANCE_PCT if min_relevance_pct is None else min_relevance_pct
     mf = mentions.where(F.col("relevance_pct") >= min_rel).select(key, "name")
-    # df cap computed IN-PLAN (1-row corpus-size aggregate broadcast into
-    # the df filter — the exact shape of the DuckDB twin's nd CTE), so
-    # building this DataFrame triggers zero driver-side Spark jobs and the
-    # whole thing stays one lazy plan.
-    nd = mf.select(F.countDistinct(key).alias("n_docs"))
-    keep = (
-        mf.groupBy("name")
-        .agg(F.countDistinct(key).alias("df"))
-        .crossJoin(F.broadcast(nd))
-        .where(
-            F.col("df")
-            <= F.greatest(
-                F.floor(F.col("n_docs") * F.lit(df_cap_frac)).cast("long"),
-                F.lit(int(df_cap_min)).cast("long"),
-            )
-        )
-        .select("name")
+    hot = overlap.hot_elements(mf, key, "name", df_cap_min, df_cap_frac)
+    pairs = overlap.shared_pairs(
+        overlap.drop_elements(mf, "name", hot), key, "name", repartition=True
     )
-    mfk = mf.join(F.broadcast(keep), "name")
-    # The pairing join EXPLODES ~df² rows per name out of a small input.
-    # Left to itself the planner broadcasts the build side and streams the
-    # probe side at SCAN parallelism (1-2 parquet splits), so the entire
-    # Σdf² pair generation + partial aggregation runs on 1-2 cores — the
-    # measured sf1 killer (83 s single-threaded vs ~3 s parallel).  An
-    # explicit repartition on the left endpoint key fixes both halves at
-    # once: explicit numPartitions is never AQE-coalesced (the exploding
-    # output is invisible to AQE's input-byte estimates), and because
-    # HashPartitioning(a.key) satisfies ClusteredDistribution(da, db),
-    # the groupBy(da, db) aggregation afterwards needs NO further
-    # exchange — one small shuffle of the probe side replaces a
-    # single-threaded explosion AND the pair-row shuffle.
-    nparts = int(mentions.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    a, b = mfk.repartition(nparts, key).alias("a"), mfk.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.name") == F.col("b.name"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .groupBy(F.col(f"a.{key}").alias("da"), F.col(f"b.{key}").alias("db"))
-        .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
-        .select("da", "db")
+        overlap.overlap_counts(pairs)
+        .where(F.col("inter") >= min_shared)
+        .select(F.col("id_a").alias("da"), F.col("id_b").alias("db"))
     )
 
 
@@ -216,25 +180,10 @@ def pagerank_fixed_point(
     src: str = "src",
     dst: str = "dst",
     iters: int = 8,
-    tol: int | None = None,
 ) -> DataFrame:
     """(src, dst) directed edge list (pre-deduplicated) → (node, pr)
-    after ``iters`` power iterations, pr an int64 fixed-point score.
-
-    ``tol``: optional early stop — when the L1 delta of the int64 score
-    vector between consecutive iterations is <= tol, remaining
-    iterations are skipped.  The delta is one scalar aggregate, checked
-    every 2nd round (the CC convergence-check discipline: integer power
-    iteration never un-converges, so halving the serial job count costs
-    at worst one already-converged round).  The gated default stays
-    ``iters=8, tol=None`` so the DuckDB unrolled-CTE oracle is
-    untouched.  Early stop is a pure prefix: stopping after k iterations
-    yields bit-identical scores to a tol-free run with iters=k
-    (pytest-pinned) — convergence mode never changes WHAT is computed,
-    only how many rounds run.  The integer delta decays geometrically
-    (factor ≈ damping·|λ2|), so tol ≈ SCALE·1e-5 typically halves the
-    default round count; tol=0 runs to the exact integer fixed point if
-    one is reached within ``iters``.
+    after ``iters`` power iterations, pr an int64 fixed-point score.  The
+    gated ``iters=8`` matches the DuckDB unrolled-CTE oracle.
 
     Per iteration, with N nodes and S = PAGERANK_SCALE:
 
@@ -276,10 +225,7 @@ def pagerank_fixed_point(
     # `iters` driver round-trips (measured 16.7 s → ~8 s at sf0.1)
     dangling_nodes = nodes.join(has_out, "node", "left_anti").transform(cut_lineage)
     any_dangling = bool(dangling_nodes.head(1))
-    global LAST_PAGERANK_ITERS
-    LAST_PAGERANK_ITERS = 0
     for it in range(iters):
-        LAST_PAGERANK_ITERS = it + 1
         contribs = e.join(scores, e.e_src == scores.node).select(
             F.col("e_dst").alias("node"),
             F.floor(F.col("pr") / F.col("out_deg")).cast("long").alias("c"),
@@ -313,28 +259,10 @@ def pagerank_fixed_point(
         # unchanged total compute (scores is referenced ONCE per layer, so
         # nothing is evaluated twice).  Dangling graphs keep the per-round
         # cut — their scalar mass aggregate acts on scores every round and
-        # would recompute an uncut layer.  The tol path also keeps it:
-        # the odd-round delta check references scores a SECOND time
-        # (contribs join + delta join), so an uncut even-round layer would
-        # be evaluated twice.
-        if any_dangling or tol is not None or it % 2 == 1 or it == iters - 1:
+        # would recompute an uncut layer.
+        if any_dangling or it % 2 == 1 or it == iters - 1:
             new_scores = new_scores.transform(cut_lineage)
-        if tol is not None and (it % 2 == 1 or it == iters - 1):
-            delta = (
-                new_scores.alias("n")
-                .join(scores.alias("o"), "node")
-                .agg(
-                    F.coalesce(
-                        F.sum(F.abs(F.col("n.pr") - F.col("o.pr"))), F.lit(0)
-                    )
-                )
-                .first()[0]
-            )
-            scores = new_scores
-            if int(delta) <= tol:
-                break
-        else:
-            scores = new_scores
+        scores = new_scores
     return scores
 
 

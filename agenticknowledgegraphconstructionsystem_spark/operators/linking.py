@@ -13,7 +13,10 @@ Spark-first:
    Jaccard 0.5 and K=16 the miss probability is (1-0.5)^16 ≈ 1.5e-5, and
    false candidates are removed by the exact-Jaccard verify step.
 2. **Exact Jaccard verify** on the candidate pairs via a shingle
-   intersection count — candidates only, never all pairs.
+   intersection count — candidates only, never all pairs.  The verify,
+   the exact-blocking self-join and its hot-shingle cut are the shared
+   set-overlap operator (:mod:`.overlap`), the same join corpus dedup and
+   the co-mention graph use.
 3. **Connected components** by iterative min-label propagation (the
    GraphFrames-style algorithm, hand-rolled as join + min-agg per
    round with cut_lineage to cut lineage).  The min() aggregation is
@@ -36,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import cut_lineage
+from . import overlap
 
 
 def name_shingles(entities: DataFrame, n: int = 3) -> DataFrame:
@@ -265,55 +269,29 @@ def similarity_edges(
     The default cap is sized far above gate-scale dfs, so the
     kg_canonicalize oracle sees the uncut pair space."""
     sh = name_shingles(entities)
-    sizes = sh.groupBy("name").agg(F.count("*").alias("sz"))
     if blocking == "exact":
         pair_sh = sh
         if max_df is not None:
-            dfc = sh.groupBy("shingle").agg(F.count("*").alias("_df"))
-            pair_sh = sh.join(
-                dfc.where(F.col("_df") <= max_df), "shingle"
-            ).drop("_df")
-        a = pair_sh.select(F.col("name").alias("name_a"), "shingle")
-        b = pair_sh.select(F.col("name").alias("name_b"), F.col("shingle").alias("shingle_x"))
+            hot = overlap.hot_elements(sh, "name", "shingle", max_df)
+            pair_sh = overlap.drop_elements(sh, "shingle", hot)
         cand = (
-            a.join(b, F.col("shingle") == F.col("shingle_x"))
-            .where(F.col("name_a") < F.col("name_b"))
-            .select("name_a", "name_b")
+            overlap.shared_pairs(pair_sh, "name", "shingle")
+            .select("id_a", "id_b")
             .distinct()
         )
-    elif mode == "representative":
-        cand = representative_band_pairs(minhash_signatures(sh, num_hashes))
-    elif mode == "auto":
-        cand = auto_band_pairs(minhash_signatures(sh, num_hashes))
     else:
-        cand = candidate_pairs(minhash_signatures(sh, num_hashes))
-    sh_b = sh.select(
-        F.col("name").alias("nb"), F.col("shingle").alias("shingle_b")
-    )
-    inter = (
-        cand.join(sh.withColumnRenamed("name", "name_a"), "name_a")
-        .join(
-            sh_b,
-            (F.col("name_b") == F.col("nb"))
-            & (F.col("shingle") == F.col("shingle_b")),
-        )
-        .groupBy("name_a", "name_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    # threshold as exact integer cross-multiplication (den·inter >= num·union)
-    # so the DuckDB canonicalization oracle replicates the cut bit-for-bit;
-    # threshold_fraction bounds the denominator (a non-terminating threshold
-    # would overflow the int64 guard — semantics.THRESHOLD_MAX_DEN)
-    from ..semantics import threshold_fraction
-
-    num, den = threshold_fraction(threshold)
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    return (
-        inter.join(sizes.withColumnsRenamed({"name": "name_a", "sz": "sz_a"}), "name_a")
-        .join(sizes.withColumnsRenamed({"name": "name_b", "sz": "sz_b"}), "name_b")
-        .where(F.col("inter") * den >= F.lit(num) * union)
-        .withColumn("jaccard", F.col("inter") / union)
-        .select("name_a", "name_b", "jaccard")
+        sig = minhash_signatures(sh, num_hashes)
+        if mode == "representative":
+            cand = representative_band_pairs(sig)
+        elif mode == "auto":
+            cand = auto_band_pairs(sig)
+        else:
+            cand = candidate_pairs(sig)
+        cand = cand.toDF("id_a", "id_b")
+    # verified against the UNCUT shingle sets: the df cut above stops a
+    # hot shingle from pairing, never from counting in the Jaccard
+    return overlap.verify_jaccard(cand, sh, "name", "shingle", threshold).select(
+        F.col("id_a").alias("name_a"), F.col("id_b").alias("name_b"), "jaccard"
     )
 
 
@@ -447,17 +425,15 @@ def connected_components(
 def canonicalize(
     entities: DataFrame,
     threshold: float = 0.5,
-    scorer: str = "jaccard",
     blocking: str = "lsh",
     max_iter: int = 20,
     mode: str = "all_pairs",
 ) -> DataFrame:
     """→ (name, canonical_name, component).  Canonical member = highest
     mention_count, tie-break lexicographically smallest name.  Singleton
-    entities map to themselves.  scorer: 'jaccard' (exact set overlap) or
-    'tfidf_cosine' (idf-weighted, favors matches on rare shingles);
-    blocking: see :func:`similarity_edges`; max_iter: CC round bound
-    (pointer jumping makes 20 cover diameter ~2^20 — see
+    entities map to themselves.  Edges are exact char-3gram Jaccard
+    >= threshold; blocking: see :func:`similarity_edges`; max_iter: CC
+    round bound (pointer jumping makes 20 cover diameter ~2^20 — see
     :func:`connected_components`); mode: 'all_pairs' (exact),
     'representative' (linear-cost dense-family escape hatch — see
     :func:`representative_band_pairs`), or 'auto' (exact below
@@ -468,12 +444,7 @@ def canonicalize(
     Building the plan is not lazy: it runs :func:`connected_components`,
     whose eager ``cut_lineage`` calls execute Spark jobs before the
     returned frame is ever acted on."""
-    if scorer == "tfidf_cosine":
-        edges = tfidf_cosine_edges(entities, threshold).withColumnRenamed(
-            "cosine", "jaccard"
-        )
-    else:
-        edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
+    edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
     comp = connected_components(edges, max_iter=max_iter)
     members = entities.join(comp, "name", "left").withColumn(
         "component", F.coalesce(F.col("component"), F.xxhash64("name"))

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import semantics as S
+from . import overlap
 
 
 def seminal_url(mentions: DataFrame) -> DataFrame:
@@ -256,40 +257,28 @@ def pairwise_shared_concepts(
     shared-concept stats for every doc pair.
 
     Scale strategy (north_rule skew clause):
-    * document-frequency cap — concepts in > max(max_df_frac·N, max_df_min)
-      docs are excluded from *pairing* (they'd contribute |df|² pairs and
-      no discrimination; analog of a stopword cut),
+    * document-frequency cap — concepts in > max(floor(max_df_frac·N),
+      max_df_min) docs are excluded from *pairing* (they'd contribute
+      |df|² pairs and no discrimination; analog of a stopword cut),
+      computed inside the plan, so building this DataFrame runs no job,
+    * the probe side is hash-repartitioned on its url, so the Σdf² pair
+      explosion runs at shuffle parallelism and the bucket aggregate
+      needs no further exchange,
     * AQE skew-join splitting handles residual hot names,
     * the pair space is halved with ``a.url < b.url``.
+    Cap, self-join and repartition are the set-overlap operator
+    (operators/overlap.py) that graph.comention_edges also uses.
     """
     m = mentions.where(F.col("relevance_pct") >= S.MIN_RELEVANCE_PCT).select(
         "url", "name", "relevance_pct"
     )
-    n_docs = m.select("url").distinct().count()
-    cap = max(int(n_docs * max_df_frac), max_df_min)
-    df_per_name = m.groupBy("name").agg(F.countDistinct("url").alias("df"))
-    keep = df_per_name.where(F.col("df") <= cap).select("name")
-    mf = m.join(F.broadcast(keep), "name")
-    # Explicit repartition of the probe side on the left endpoint: the
-    # pair join explodes ~df² rows out of a small input, so the planner's
-    # broadcast join would stream it at scan parallelism (1-2 tasks) and
-    # AQE cannot see the explosion in its input-byte estimates.  The
-    # explicit numPartitions is never AQE-coalesced, and because
-    # HashPartitioning(a.url) satisfies ClusteredDistribution(url_a,
-    # url_b) the _bucket_agg groupBy needs no further exchange — the
-    # graph.comention_edges discipline (measured there: 83 s → ~3 s at
-    # sf1 for the same Σdf² explosion).
-    nparts = int(mentions.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    a = mf.repartition(nparts, "url").alias("a")
-    b = mf.alias("b")
-    pairs = (
-        a.join(b, F.col("a.name") == F.col("b.name"))
-        .where(F.col("a.url") < F.col("b.url"))
-        .select(
-            F.col("a.url").alias("url_a"),
-            F.col("b.url").alias("url_b"),
-            F.col("a.name").alias("name"),
-            (F.col("a.relevance_pct") + F.col("b.relevance_pct")).alias("avg2_pct"),
-        )
+    hot = overlap.hot_elements(m, "url", "name", max_df_min, max_df_frac)
+    pairs = overlap.shared_pairs(
+        overlap.drop_elements(m, "name", hot), "url", "name", repartition=True
+    ).select(
+        F.col("id_a").alias("url_a"),
+        F.col("id_b").alias("url_b"),
+        "name",
+        (F.col("relevance_pct_a") + F.col("relevance_pct_b")).alias("avg2_pct"),
     )
     return _bucket_agg(pairs, ["url_a", "url_b"])

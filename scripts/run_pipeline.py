@@ -7,24 +7,28 @@
       --conf spark.sql.shuffle.partitions=<2-3x total executor cores> \
       scripts/run_pipeline.py \
       --pages <iceberg-table-or-parquet-path> \
-      --out <warehouse-path> --run-id <id> [--resume]
+      --out <warehouse-path> --run-id <id>
 
-Packaging: `cd /root/repo && zip -r kgspark.zip
+Re-running with the same --out resumes: stages already committed there are
+read back instead of recomputed (the summary's ``recomputed_stages``).
+
+Packaging, from the repository root: `zip -r kgspark.zip
 agenticknowledgegraphconstructionsystem_spark` — the package must reach the
 executors because the Arrow UDFs import `semantics` there (the
 byte-identical-extraction contract depends on driver and executors running
 the same pure function).
 
-Locally (this sandbox): `python scripts/run_pipeline.py --n-docs 200 --out /tmp/kg_out`.
+Locally: `python scripts/run_pipeline.py --n-docs 200 --out /tmp/kg_out`.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
