@@ -41,7 +41,7 @@ def _to_matrix(s: pd.Series) -> np.ndarray:
 
 def rhp_signature_udf(planes: list[list[float]]):
     """→ pandas UDF: array<double|float> embedding → packed long signature
-    (bit i = sign(v · plane_i), same packing as rhp_signature_col)."""
+    with bit i set when v · plane_i >= 0, bits packed low to high."""
     p_mat = [np.asarray(p, dtype=np.float64) for p in planes]
 
     @pandas_udf(T.LongType())

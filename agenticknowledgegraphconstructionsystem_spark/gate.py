@@ -61,7 +61,7 @@ def q_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = build_entities_with_context(_mentions(spark, sf_dir))
+    e = build_entities_with_context(build_doc_concept_edges(_mentions(spark, sf_dir)))
     return e.select(
         "name",
         "concept_type",

@@ -204,8 +204,7 @@ def semantic_dedup(
         corpus.select(
             F.col(id_col).alias("_id"),
             F.col(vec_col).cast("array<double>").alias("_v"),
-        ),
-        True,
+        )
     )
     centroids = kmeans_fit(corpus, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     assigned = assign_to_centroids(corp, centroids, id_col="_id", vec_col="_v").select(

@@ -52,8 +52,8 @@ DEFAULT_MAX_BUCKET = 10_000
 _PERSISTED: list[DataFrame] = []
 
 
-def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
-    """Lazy MEMORY_AND_DISK persist for an intermediate referenced by
+def _maybe_persist(df: DataFrame) -> DataFrame:
+    """MEMORY_AND_DISK persist for an intermediate referenced by
     several plan branches (sizes + both self-join sides + verify): Spark
     performs no cross-branch common-subexpression elimination, so without
     this the shingle/signature subtree is re-evaluated per branch
@@ -75,10 +75,9 @@ def _maybe_persist(df: DataFrame, flag: bool) -> DataFrame:
     bench, a session-scoped pytest SparkSession) should call
     :func:`unpersist_tracked` after the final action on each result, or the
     cached blocks accumulate until driver GC happens to drop them."""
-    if flag:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        _PERSISTED.append(df)
-        df.count()
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    _PERSISTED.append(df)
+    df.count()
     return df
 
 
@@ -224,12 +223,11 @@ def minhash_banded_signatures(
     n: int = 5,
     num_hashes: int = 32,
     bands: int = 16,
-    persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """→ (shingles, banded): per-doc MinHash signature exploded to one row
-    per band, using the portable poly/affine hash family.  ``persist``
-    lazily caches the shingle table — it feeds the signature aggregation
-    AND the verify step's three branches (see _maybe_persist).
+    per band, using the portable poly/affine hash family.  The shingle
+    table is persisted — it feeds the signature aggregation AND the
+    verify step's three branches (see _maybe_persist).
 
     Per (doc, shingle): one char-fold poly_hash, then ``num_hashes`` affine
     permutations reduced by min() — a single map-side-combinable
@@ -242,8 +240,7 @@ def minhash_banded_signatures(
     assert rows_per_band <= 2, "band packing is base-P in a 63-bit long"
     assert num_hashes <= S.NUM_MINHASHES
     sh = _maybe_persist(
-        word_ngram_shingles(docs, key, text_col, n).where(F.col("shingle") != ""),
-        persist,
+        word_ngram_shingles(docs, key, text_col, n).where(F.col("shingle") != "")
     )
     hs = sh.select(F.col(key), poly_hash_col(F.col("shingle")).alias("h"))
     sig = hs.groupBy(key).agg(
@@ -288,7 +285,7 @@ def minhash_near_duplicates(
     # aggregation's map side).  One (key, band_id, band_hash) row per doc
     # band is corpus-linear and orders of magnitude narrower than the
     # shingle table already persisted above.
-    banded = _maybe_persist(banded, True)
+    banded = _maybe_persist(banded)
     cand = capped_band_pairs(banded, key, max_bucket)
     return overlap.verify_jaccard(cand, sh, key, "shingle", threshold)
 
@@ -327,13 +324,13 @@ def winnow_near_duplicates(
     # persist BEFORE the df branch: the winnowing expression (per-gram char
     # folds) is the expensive subtree and feeds both the df count and the
     # filtered fp table
-    fp = _maybe_persist(winnow_fingerprints(docs, key, text_col, k, w), True)
+    fp = _maybe_persist(winnow_fingerprints(docs, key, text_col, k, w))
     if max_df is not None:
         # persisting the tiny hot list (at most |fp|/max_df entries) gives
         # one df evaluation for every consuming branch without caching a
         # second, corpus-sized filtered table: each branch reads the
         # cached fp table plus a small anti-join
-        hot = _maybe_persist(overlap.hot_elements(fp, key, "fp", max_df), True)
+        hot = _maybe_persist(overlap.hot_elements(fp, key, "fp", max_df))
         fp = overlap.drop_elements(fp, "fp", hot)
     return overlap.self_jaccard(fp, key, "fp", threshold)
 
@@ -407,7 +404,7 @@ def simhash_near_duplicates(
     hot 16-bit buckets are capped exactly like the MinHash bands."""
     # persist: the signature aggregation feeds the banding AND both join
     # sides of the pair verify
-    sig = _maybe_persist(simhash_signatures(docs, key, text_col), True)
+    sig = _maybe_persist(simhash_signatures(docs, key, text_col))
     quarters = F.array(
         *[
             F.shiftrightunsigned(F.col("simhash"), 16 * q)

@@ -82,16 +82,16 @@ def entity_first_context(edges: DataFrame) -> DataFrame:
     )
 
 
-def build_entities_with_context(mentions: DataFrame) -> DataFrame:
+def build_entities_with_context(edges: DataFrame) -> DataFrame:
     """:func:`build_entities` + the reference's keep-first description
-    payload (concepts.description, db_init.py:57).  Composed at this level
-    so the count aggregation stays numeric-only (HashAggregate end-to-end,
-    see PLANS.md) while the string payload is selected over the much
-    smaller deduped edge table and joined back on name — at cluster scale
-    the entity side is vocabulary-sized, so this is a broadcast join."""
-    ents = build_entities(mentions)
-    fc = entity_first_context(build_doc_concept_edges(mentions))
-    return ents.join(fc, "name", "left")
+    payload (concepts.description, db_init.py:57), both over the edge
+    table of :func:`build_doc_concept_edges` (one row per (url, name), the
+    reference's paper_concepts).  Composed at this level so the count
+    aggregation stays numeric-only (HashAggregate end-to-end, see
+    PLANS.md) while the string payload is selected separately and joined
+    back on name — at cluster scale the entity side is vocabulary-sized,
+    so this is a broadcast join."""
+    return build_entities(edges).join(entity_first_context(edges), "name", "left")
 
 
 def build_doc_concept_edges(mentions: DataFrame) -> DataFrame:

@@ -97,82 +97,6 @@ def candidate_pairs(
     )
 
 
-def representative_band_pairs(signatures: DataFrame) -> DataFrame:
-    """Hub-and-spoke candidates per LSH bucket: each member pairs with the
-    bucket REPRESENTATIVE (min name) only — a bucket of B members emits
-    B−1 candidate rows instead of B(B−1)/2.
-
-    This is the linear-cost escape hatch for dense alias families (the
-    round-4 verdict's one carried ``weak``): exact all-pair verification
-    inside a family of f mutually-similar names is O(f²) *by construction*
-    ("all pairs >= threshold" IS the answer set), which at web scale makes
-    mega-families (boilerplate names, numeric variants) the dominant cost.
-    With representative pairing the verified edge set is a star per
-    bucket; connected components supplies the transitive closure, so the
-    FAMILIES recovered are near-identical while the edge count drops from
-    quadratic to linear.
-
-    Semantics delta vs all-pairs (measured in test_linking + PLANS.md):
-    * recall — a true pair can be missed only if in EVERY shared band the
-      bucket rep is similar to neither member; banding redundancy
-      (num_hashes buckets per name) makes this rare.
-    * precision — two members within threshold of a rep but not of each
-      other merge through the star (CC would also merge them through any
-      chain, so this is the usual transitive-closure semantics, reached
-      through one more hop).
-    Since the rep is min(name) per bucket, pairs come out already
-    canonically ordered (name_a < name_b)."""
-    reps = signatures.groupBy("band_id", "band_hash").agg(
-        F.min("name").alias("name_a")
-    )
-    return (
-        signatures.join(reps, ["band_id", "band_hash"])
-        .where(F.col("name") != F.col("name_a"))
-        .select("name_a", F.col("name").alias("name_b"))
-        .distinct()
-    )
-
-
-#: bucket-size threshold for ``mode='auto'``: LSH buckets with at most
-#: this many members verify ALL in-bucket pairs (exact pair semantics);
-#: larger buckets switch to hub-and-spoke representative pairing (O(B)
-#: candidate rows).  Sized from the measured probes: organic alias
-#: families are small (the sf gates' largest bucket is ≪ 32, so the
-#: kg_canonicalize-style answer is byte-identical under auto), while the
-#: 100-member dense-family probe recovered identical partitions through
-#: the star path (P/R 1.0, PLANS.md round 5) — so anything the threshold
-#: diverts is exactly the regime the star path is proven on.
-DEFAULT_REP_BUCKET = 32
-
-
-def auto_band_pairs(
-    signatures: DataFrame, rep_bucket: int = DEFAULT_REP_BUCKET
-) -> DataFrame:
-    """Per-bucket strategy selection (``mode='auto'``): one bucket-size
-    aggregate splits the signature table; small buckets emit the exact
-    all-pair candidates, oversize buckets emit representative stars.
-    A web-scale vocabulary hits mega-families (boilerplate names, numeric
-    variants) without giving up exact semantics everywhere else — the
-    per-bucket analog of AQE's skew-join split.  Pairs from both branches
-    come out canonically ordered (name_a < name_b for the pair branch;
-    rep = min name for the star branch), then union-distinct."""
-    sizes = signatures.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("_sz")
-    )
-    sig = signatures.join(sizes, ["band_id", "band_hash"])
-    small = sig.where(F.col("_sz") <= rep_bucket).drop("_sz")
-    a = small.select(F.col("name").alias("name_a"), "band_id", "band_hash")
-    b = small.select(F.col("name").alias("name_b"), "band_id", "band_hash")
-    exact_pairs = (
-        a.join(b, ["band_id", "band_hash"])
-        .where(F.col("name_a") < F.col("name_b"))
-        .select("name_a", "name_b")
-    )
-    big = sig.where(F.col("_sz") > rep_bucket).drop("_sz")
-    star_pairs = representative_band_pairs(big)
-    return exact_pairs.unionByName(star_pairs).distinct()
-
-
 def tfidf_cosine_edges(
     entities: DataFrame, threshold: float = 0.5, num_hashes: int = 16
 ) -> DataFrame:
@@ -236,7 +160,6 @@ def similarity_edges(
     num_hashes: int = 16,
     blocking: str = "lsh",
     max_df: int | None = DEFAULT_NAME_SHINGLE_MAX_DF,
-    mode: str = "all_pairs",
 ) -> DataFrame:
     """→ (name_a, name_b, jaccard) for candidate pairs with exact char-3gram
     Jaccard >= threshold.
@@ -245,18 +168,7 @@ def similarity_edges(
     recall (miss prob (1-j)^num_hashes), bucket-capped, the corpus-scale
     path.  blocking='exact': candidates = every pair sharing >= 1 shingle —
     the oracle-checkable path; still join-blocked, never all-pairs.
-
-    mode='all_pairs' (default): every in-bucket pair is verified — exact
-    pair semantics, O(f²) inside a dense f-member alias family.
-    mode='representative' (lsh blocking only): members verify against the
-    bucket representative only (:func:`representative_band_pairs`) — O(f)
-    edges per family, transitivity restored by connected components; use
-    for web-scale vocabularies where mega-families dominate.
-    mode='auto' (lsh blocking only): per-bucket selection — buckets of at
-    most :data:`DEFAULT_REP_BUCKET` members keep exact all-pair
-    verification, larger buckets switch to the representative star
-    (:func:`auto_band_pairs`) — the production default shape for dirty
-    web vocabularies.
+    Either way every candidate pair is verified (exact pair semantics).
 
     ``max_df`` (exact path only) is the hot-shingle cut: a shingle shared
     by df names emits df² candidate rows, and at a 10^6-name vocabulary
@@ -280,14 +192,9 @@ def similarity_edges(
             .distinct()
         )
     else:
-        sig = minhash_signatures(sh, num_hashes)
-        if mode == "representative":
-            cand = representative_band_pairs(sig)
-        elif mode == "auto":
-            cand = auto_band_pairs(sig)
-        else:
-            cand = candidate_pairs(sig)
-        cand = cand.toDF("id_a", "id_b")
+        cand = candidate_pairs(minhash_signatures(sh, num_hashes)).toDF(
+            "id_a", "id_b"
+        )
     # verified against the UNCUT shingle sets: the df cut above stops a
     # hot shingle from pairing, never from counting in the Jaccard
     return overlap.verify_jaccard(cand, sh, "name", "shingle", threshold).select(
@@ -427,24 +334,19 @@ def canonicalize(
     threshold: float = 0.5,
     blocking: str = "lsh",
     max_iter: int = 20,
-    mode: str = "all_pairs",
 ) -> DataFrame:
     """→ (name, canonical_name, component).  Canonical member = highest
     mention_count, tie-break lexicographically smallest name.  Singleton
     entities map to themselves.  Edges are exact char-3gram Jaccard
     >= threshold; blocking: see :func:`similarity_edges`; max_iter: CC
     round bound (pointer jumping makes 20 cover diameter ~2^20 — see
-    :func:`connected_components`); mode: 'all_pairs' (exact),
-    'representative' (linear-cost dense-family escape hatch — see
-    :func:`representative_band_pairs`), or 'auto' (exact below
-    DEFAULT_REP_BUCKET members per LSH bucket, star above — see
-    :func:`auto_band_pairs`).  A NULL mention_count counts as 0 in the
-    election.
+    :func:`connected_components`).  A NULL mention_count counts as 0 in
+    the election.
 
     Building the plan is not lazy: it runs :func:`connected_components`,
     whose eager ``cut_lineage`` calls execute Spark jobs before the
     returned frame is ever acted on."""
-    edges = similarity_edges(entities, threshold, blocking=blocking, mode=mode)
+    edges = similarity_edges(entities, threshold, blocking=blocking)
     comp = connected_components(edges, max_iter=max_iter)
     members = entities.join(comp, "name", "left").withColumn(
         "component", F.coalesce(F.col("component"), F.xxhash64("name"))
@@ -472,44 +374,13 @@ def canonicalize(
 
 def repoint_mentions(mentions: DataFrame, mapping: DataFrame) -> DataFrame:
     """Re-point the mentions fact table at canonical entities — one
-    broadcast join (mapping is vocabulary-sized)."""
+    broadcast join (mapping is vocabulary-sized).  Two surface forms of
+    one doc that merge leave duplicate (url, name) rows;
+    :func:`.entities.build_doc_concept_edges` collapses them."""
     return (
         mentions.join(
             F.broadcast(mapping.select("name", "canonical_name")), "name", "left"
         )
         .withColumn("name", F.coalesce(F.col("canonical_name"), F.col("name")))
         .drop("canonical_name")
-    )
-
-
-def dedup_repointed_mentions(mentions: DataFrame) -> DataFrame:
-    """Collapse to one row per (url, name) after canonical re-pointing.
-
-    When two surface forms in the same doc merge (e.g. 'row batch' +
-    'batch'), :func:`repoint_mentions` leaves duplicate (url, name) rows;
-    un-deduplicated they double-count sum_relevance_pct in build_entities
-    and multiplicatively inflate the shared-concept join in relationship
-    discovery.  Keeper = highest relevance_pct, tie-broken earliest pos,
-    then concept_type/context — a single map-side-combinable max(struct)
-    (same best-of pattern as build_doc_concept_edges), never partition
-    order."""
-    best = F.max(
-        F.struct(
-            F.col("relevance_pct").alias("r"),
-            (-F.col("pos")).alias("negpos"),
-            F.col("concept_type").alias("ct"),
-            F.col("context").alias("cx"),
-        )
-    ).alias("b")
-    return (
-        mentions.groupBy("url", "name")
-        .agg(best)
-        .select(
-            "url",
-            "name",
-            F.col("b.ct").alias("concept_type"),
-            F.col("b.r").alias("relevance_pct"),
-            (-F.col("b.negpos")).cast("int").alias("pos"),
-            F.col("b.cx").alias("context"),
-        )
     )

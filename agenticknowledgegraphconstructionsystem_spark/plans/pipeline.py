@@ -4,8 +4,13 @@ metrics").
 
 Stage DAG (SURVEY §7, stages enum FIXTURES.md §5):
 
-    extract → mentions → link → canonicalize(entities) → materialize
-    (edges/relationships/triples) → validate
+    extract → mentions → canonical_map (link) → edges → entities /
+    relationships / graph_metrics → triples → validate
+
+``edges`` is the one deduplicated mention table, the reference's
+``paper_concepts`` (one row per (url, name), db_init.py:80-93): the best
+mention per key after canonical re-pointing.  Every stage after it reads
+the committed edges, never the mentions.
 
 Each stage commits through :class:`StageStore` (Iceberg-snapshot semantics
 over parquet) and appends lineage rows — one per output partition:
@@ -50,11 +55,7 @@ from ..operators.entities import (
     build_entities_with_context,
 )
 from ..operators.extract import extract_docs
-from ..operators.linking import (
-    canonicalize,
-    dedup_repointed_mentions,
-    repoint_mentions,
-)
+from ..operators.linking import canonicalize, repoint_mentions
 from ..operators.mentions import clean_mentions, detect_mentions_native
 from ..operators.relationships import discover_relationships, upsert_relationship_edges
 from ..operators.triples import build_triples
@@ -70,9 +71,9 @@ STAGES = (
     "dedup",
     "curate",
     "mentions",
-    "entities",
     "canonical_map",
     "edges",
+    "entities",
     "relationships",
     "triples",
     "findings",
@@ -113,7 +114,6 @@ class Pipeline:
         run_id: str = "run0",
         link: bool = True,
         link_threshold: float = 0.5,
-        link_mode: str = "all_pairs",
         dedup_mode: str | None = None,
         dedup_threshold: float = 0.5,
         graph_metrics: bool = False,
@@ -208,14 +208,8 @@ class Pipeline:
         self.spark = spark
         self.store = StageStore(spark, out_dir)
         self.run_id = run_id
-        if link_mode not in ("all_pairs", "representative", "auto"):
-            raise ValueError(f"unknown link_mode: {link_mode!r}")
         self.link = link
         self.link_threshold = link_threshold
-        # 'auto' = per-LSH-bucket strategy selection (linking.auto_band_pairs)
-        # — the web-scale default shape; 'all_pairs' keeps the exact gate
-        # semantics and stays the constructor default
-        self.link_mode = link_mode
         self.dedup_mode = dedup_mode
         self.dedup_threshold = dedup_threshold
         self.graph_metrics = graph_metrics
@@ -467,7 +461,8 @@ class Pipeline:
         Incremental shape (the 100 TB story — adding 0.1% of docs must
         not recompute the other 99.9%):
 
-        * **extract** — delta-only by construction (the resume anti-join).
+        * **extract** — delta-only by construction (the resume anti-join),
+          appended with lineage rows for the delta partitions.
         * **mentions** — per-doc, so the delta's mentions are detected and
           APPENDED to the committed mentions table (with lineage rows for
           the delta partitions); the full corpus is never re-detected.
@@ -475,10 +470,10 @@ class Pipeline:
           mentions — a near-dup family can span old+new docs, so any
           ``dedup_mode`` forces the corpus-wide dedup (and hence mention
           re-detection) to rerun.
-        * **entities / canonical_map / edges / relationships / triples /
+        * **canonical_map / edges / entities / relationships / triples /
           findings / validated_edges** — re-aggregated from the enlarged
           mentions table on the next run().  These are corpus-level
-          aggregates and joins; entities re-aggregate cheaply (one
+          aggregates and joins; edges re-aggregate cheaply (one
           shuffle over mentions), while linking/CC genuinely needs the
           rebuild (a new surface form can bridge two existing
           components).
@@ -487,8 +482,14 @@ class Pipeline:
         """
         from ..sources.io import resume_inputs
 
+        t0 = time.time()
         if not self.store.is_committed("extract"):
-            return self.store.commit("extract", extract_docs(pages), self.run_id)
+            out = self.store.commit("extract", extract_docs(pages), self.run_id)
+            m = self.store.manifest("extract")
+            self._lineage_rows(
+                "extract", m["parts"], m["rows"], int((time.time() - t0) * 1000)
+            )
+            return out
         committed = self.store.read("extract")
         todo = resume_inputs(pages, committed, "url")
         # one materialization serves the no-op check, the append AND the
@@ -520,22 +521,36 @@ class Pipeline:
         for stage in STAGES:
             if stage not in keep:
                 self.store.uncommit(stage)
-        self.store.append("extract", new_docs)
+        self._append("extract", new_docs, n_new, t0)
         if incremental_mentions:
-            t0 = time.time()
-            n_base_parts = len(self.store.manifest("mentions")["parts"])
-            self.store.append(
-                "mentions", clean_mentions(detect_mentions_native(new_docs))
-            )
-            # the delta's parts follow the base's (StageStore.append)
-            delta_parts = self.store.manifest("mentions")["parts"][n_base_parts:]
-            self._lineage_rows(
-                "mentions", delta_parts, n_new, int((time.time() - t0) * 1000)
+            self._append(
+                "mentions",
+                clean_mentions(detect_mentions_native(new_docs)),
+                n_new,
+                time.time(),
             )
         return new_docs
 
+    def _append(
+        self, stage: str, delta: DataFrame, input_rows: int, t0: float
+    ) -> None:
+        """Append ``delta`` to the committed ``stage`` and write lineage
+        rows for the delta's parts, timed from ``t0``."""
+        n_base_parts = len(self.store.manifest(stage)["parts"])
+        self.store.append(stage, delta)
+        # the delta's parts follow the base's (StageStore.append)
+        delta_parts = self.store.manifest(stage)["parts"][n_base_parts:]
+        self._lineage_rows(
+            stage, delta_parts, input_rows, int((time.time() - t0) * 1000)
+        )
+
     # -- the pipeline ----------------------------------------------------
     def run(self, pages: DataFrame) -> dict[str, DataFrame]:
+        """Run (or resume) every stage over ``pages``; returns the
+        committed tables by name.  ``mentions`` is the committed mentions
+        stage (surface forms, before canonicalization); ``edges`` is the
+        canonical table, one row per (url, name), that entities,
+        relationships and graph_metrics are built from."""
         # inputs of each stage, as committed stage names (_stage docstring);
         # the raw pages are counted as extract's rows (module docstring)
         pages_in = ("extract",)
@@ -553,43 +568,37 @@ class Pipeline:
         if self.curate:
             docs = self._stage("curate", lambda: self._curate_docs(docs), docs_in)
             docs_in = ("curate",)
-        raw_mentions = self._stage(
+        mentions = self._stage(
             "mentions", lambda: clean_mentions(detect_mentions_native(docs)), docs_in
         )
         mentions_in = ("mentions",)
+        linked = mentions
         if self.link:
-            raw_entities = build_entities(raw_mentions)
+            raw_entities = build_entities(mentions)
             mapping = self._stage(
                 "canonical_map",
                 lambda: canonicalize(
                     raw_entities.select("name", "mention_count"),
                     threshold=self.link_threshold,
-                    mode=self.link_mode,
                 ),
                 mentions_in,
             )
             mentions_in = ("mentions", "canonical_map")
-            # merged surface forms leave duplicate (url, name) rows —
-            # collapse to the best row per key before entities/relationships
-            # (else sum_relevance double-counts and the shared-concept join
-            # inflates multiplicatively)
-            mentions = dedup_repointed_mentions(
-                repoint_mentions(raw_mentions, mapping)
-            )
-        else:
-            mentions = raw_mentions
-        # entities carry the keep-first description payload
-        # (concepts.description, database.ts:109) via the deduped edge table
-        entities = self._stage(
-            "entities", lambda: build_entities_with_context(mentions), mentions_in
-        )
+            linked = repoint_mentions(mentions, mapping)
+        # the one best mention per (url, name).  Merged surface forms
+        # leave duplicate (url, name) rows that would double-count
+        # sum_relevance and inflate the shared-concept join, so every
+        # stage below reads this committed table, never the mentions.
         edges = self._stage(
-            "edges", lambda: build_doc_concept_edges(mentions), mentions_in
+            "edges", lambda: build_doc_concept_edges(linked), mentions_in
+        )
+        entities = self._stage(
+            "entities", lambda: build_entities_with_context(edges), ("edges",)
         )
         rels = self._stage(
             "relationships",
-            lambda: discover_relationships(docs, mentions),
-            docs_in + mentions_in,
+            lambda: discover_relationships(docs, edges),
+            docs_in + ("edges",),
         )
         rel_edges, _null_rels = upsert_relationship_edges(rels)
         triples = self._stage(
@@ -614,7 +623,7 @@ class Pipeline:
         gm = None
         if self.graph_metrics:
             gm = self._stage(
-                "graph_metrics", lambda: self._graph_metrics(mentions), mentions_in
+                "graph_metrics", lambda: self._graph_metrics(edges), ("edges",)
             )
         lg = hr = None
         if self.link_graph:
@@ -769,7 +778,7 @@ class Pipeline:
             n_shards=self.assemble_shards,
         )
 
-    def _graph_metrics(self, mentions: DataFrame) -> DataFrame:
+    def _graph_metrics(self, edges: DataFrame) -> DataFrame:
         """Optional reporting stage: PageRank + triangle counts over the
         materialized co-mention document graph → (url, pr, n_triangles),
         one row per graph node.  Same operators the kg_pagerank /
@@ -783,7 +792,7 @@ class Pipeline:
             triangle_counts,
         )
 
-        kept = comention_edges(mentions, key="url").transform(cut_lineage)
+        kept = comention_edges(edges, key="url").transform(cut_lineage)
         sym = kept.select(
             F.col("da").alias("src"), F.col("db").alias("dst")
         ).unionByName(kept.select(F.col("db").alias("src"), F.col("da").alias("dst")))

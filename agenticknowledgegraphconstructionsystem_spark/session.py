@@ -18,9 +18,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 
-def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
+def cut_lineage(df: DataFrame) -> DataFrame:
     """Truncate ``df``'s lineage for iterative algorithms (PageRank /
     connected-components rounds, triangle-edge reuse, incremental deltas).
+    Eager: the cut runs a Spark job before it returns.
 
     Dispatch: when the SparkContext has a checkpoint directory configured
     (``sc.setCheckpointDir("hdfs://…")`` — the cluster deployment mode),
@@ -33,8 +34,8 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     checkpoints make each round restartable from storage instead.
     """
     if df.sparkSession.sparkContext.getCheckpointDir() is not None:
-        return df.checkpoint(eager)
-    return df.localCheckpoint(eager)
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 #: rows per spread partition (env ``SPARK_GRAFT_SPREAD_ROWS``): sized so a

@@ -11,6 +11,9 @@
 
 Re-running with the same --out resumes: stages already committed there are
 read back instead of recomputed (the summary's ``recomputed_stages``).
+The summary's ``mentions`` counts the committed surface-form mention rows
+(before canonicalization), not the canonical one-row-per-(url, name)
+edge table.
 
 Packaging, from the repository root: `zip -r kgspark.zip
 agenticknowledgegraphconstructionsystem_spark` — the package must reach the
@@ -52,13 +55,6 @@ def main() -> None:
     )
     ap.add_argument(
         "--link-threshold", type=float, default=0.5, help="canonicalization Jaccard cut"
-    )
-    ap.add_argument(
-        "--link-mode",
-        choices=["all_pairs", "representative", "auto"],
-        default="all_pairs",
-        help="candidate strategy: exact all-pairs, representative stars, "
-        "or per-bucket auto (exact <=32-member buckets, stars above)",
     )
     ap.add_argument(
         "--graph-metrics",
@@ -153,7 +149,6 @@ def main() -> None:
         run_id=args.run_id,
         link=not args.no_link,
         link_threshold=args.link_threshold,
-        link_mode=args.link_mode,
         dedup_mode=args.dedup_mode,
         dedup_threshold=args.dedup_threshold,
         graph_metrics=args.graph_metrics,

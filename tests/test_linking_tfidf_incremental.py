@@ -51,6 +51,18 @@ def test_tfidf_cosine_matches_brute_force(spark):
     assert ("spark", "sparks") in got
 
 
+def test_ingest_increment_writes_extract_lineage(spark, tmp_path):
+    """Both extract writes of ingest_increment (the fresh commit and the
+    delta append) leave lineage rows that add up to the committed rows."""
+    all_pages = synthetic_pages(spark, 30)
+    p = Pipeline(spark, str(tmp_path / "lin"), run_id="l1")
+    p.ingest_increment(all_pages.where("url < 'https://example.org/paper/00020'"))
+    p.ingest_increment(all_pages)
+    lin = p.lineage().where("stage = 'extract'").collect()
+    assert sum(r["output_rows"] for r in lin) == p.store.manifest("extract")["rows"]
+    assert sorted({r["input_rows"] for r in lin}) == [10, 20]
+
+
 @pytest.mark.slow
 def test_incremental_ingest(spark, tmp_path):
     all_pages = synthetic_pages(spark, 60)

@@ -23,9 +23,12 @@ from agenticknowledgegraphconstructionsystem_spark.operators.dedup import (
     minhash_banded_signatures,
     minhash_near_duplicates,
 )
+from agenticknowledgegraphconstructionsystem_spark.operators.entities import (
+    build_doc_concept_edges,
+)
 from agenticknowledgegraphconstructionsystem_spark.operators.linking import (
     canonicalize,
-    dedup_repointed_mentions,
+    repoint_mentions,
     similarity_edges,
     tfidf_cosine_edges,
 )
@@ -150,7 +153,7 @@ def test_dedup_repointed_mentions_collapses_and_keeps_best(spark):
     m = spark.createDataFrame(
         [
             # two surface forms of one doc merged to the same canonical name
-            Row(url="u1", name="batch", concept_type="concept", relevance_pct=60, pos=40, context="lo"),
+            Row(url="u1", name="row batch", concept_type="concept", relevance_pct=60, pos=40, context="lo"),
             Row(url="u1", name="batch", concept_type="concept", relevance_pct=80, pos=12, context="hi"),
             # tie on relevance -> earliest pos wins
             Row(url="u2", name="spark", concept_type="method", relevance_pct=70, pos=9, context="late"),
@@ -158,11 +161,12 @@ def test_dedup_repointed_mentions_collapses_and_keeps_best(spark):
             Row(url="u3", name="vector", concept_type="architecture", relevance_pct=50, pos=1, context="x"),
         ]
     )
-    out = {(r["url"], r["name"]): r for r in dedup_repointed_mentions(m).collect()}
+    mapping = spark.createDataFrame([Row(name="row batch", canonical_name="batch")])
+    edges = build_doc_concept_edges(repoint_mentions(m, mapping))
+    out = {(r["url"], r["name"]): r for r in edges.collect()}
     assert len(out) == 3
     assert out[("u1", "batch")]["relevance_pct"] == 80
     assert out[("u1", "batch")]["context"] == "hi"
-    assert out[("u2", "spark")]["pos"] == 3
     assert out[("u2", "spark")]["context"] == "early"
 
 
@@ -170,7 +174,6 @@ def test_pipeline_entities_not_double_counted_after_merge(spark):
     """sum_relevance_pct must count each (url, canonical name) once even
     when two surface forms in one doc merge."""
     from agenticknowledgegraphconstructionsystem_spark.operators.entities import build_entities
-    from agenticknowledgegraphconstructionsystem_spark.operators.linking import repoint_mentions
 
     m = spark.createDataFrame(
         [
@@ -181,11 +184,46 @@ def test_pipeline_entities_not_double_counted_after_merge(spark):
     mapping = spark.createDataFrame(
         [Row(name="row batch", canonical_name="batch"), Row(name="batch", canonical_name="batch")]
     )
-    merged = dedup_repointed_mentions(repoint_mentions(m, mapping))
+    merged = build_doc_concept_edges(repoint_mentions(m, mapping))
     e = build_entities(merged).collect()
     assert len(e) == 1
     assert e[0]["mention_count"] == 1
     assert e[0]["sum_relevance_pct"] == 80  # best row only, not 140
+
+
+def test_pipeline_stages_after_linking_read_committed_edges(spark, tmp_path, monkeypatch):
+    """entities, relationships and graph_metrics are built from the
+    committed edges table (one row per (url, canonical name)), not from
+    the mentions; the returned mentions are the committed surface forms."""
+    from agenticknowledgegraphconstructionsystem_spark.plans.pipeline import Pipeline
+    from agenticknowledgegraphconstructionsystem_spark.sources.io import StageStore
+    from agenticknowledgegraphconstructionsystem_spark.sources.pages import synthetic_pages
+
+    scanned = {}
+    commit = StageStore.commit
+
+    def spy(store, stage, df, *args, **kwargs):
+        scanned[stage] = df.inputFiles()
+        return commit(store, stage, df, *args, **kwargs)
+
+    monkeypatch.setattr(StageStore, "commit", spy)
+    p = Pipeline(spark, str(tmp_path / "kg"), link=True, graph_metrics=True)
+    res = p.run(synthetic_pages(spark, 60))
+
+    n_edges = p.store.manifest("edges")["rows"]
+    lin = p.lineage().where("stage in ('entities', 'graph_metrics')").collect()
+    assert {r["stage"] for r in lin} == {"entities", "graph_metrics"}
+    assert {r["input_rows"] for r in lin} == {n_edges}
+    assert res["mentions"].count() == p.store.manifest("mentions")["rows"]
+    assert scanned["entities"]
+    assert all("/edges/" in f for f in scanned["entities"])
+
+    want = {
+        r["name"]: r["s"]
+        for r in res["edges"].groupBy("name").agg(F.sum("relevance_pct").alias("s")).collect()
+    }
+    got = {r["name"]: r["sum_relevance_pct"] for r in res["entities"].collect()}
+    assert got == want
 
 
 # ---------------------------------------------------------------------------
